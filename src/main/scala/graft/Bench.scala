@@ -232,7 +232,7 @@ object Bench {
     val sf = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse("")
     val stageTotal = "\"stage_build\":\\{([^}]*)".r.findFirstMatchIn(json)
-      .map(m => ":(-?[0-9.eE+]+)".r.findAllMatchIn(m.group(1))
+      .map(m => ":(-?[0-9.eE+-]+)".r.findAllMatchIn(m.group(1))
         .map(_.group(1).toDouble).sum).getOrElse(0.0)
     s"""{"compact":true,"metric":"total","value":${f("value")},""" +
       s""""unit":"sec","streaming_total":${f("streaming_total")},""" +

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * test session:
   *
   *  - `graft.plans.GraftExtensions` injected (SQL-surface vector
-  *    functions + both optimizer rules);
+  *    functions + the binned interval-join rule);
   *  - `BinnedIntervalJoinRule` ENABLED at bin width 50 — the one pure
   *    point-in-interval inner join in the registry is q15's ±50
   *    acctbal band join, so 50 bins each interval to ≤ 3 buckets; any
@@ -18,27 +18,6 @@ import org.apache.spark.sql.SparkSession
   *    on a 1.17× drifted board pair, BENCH_BASELINE_r14); the
   *    quadratic-to-linear rewrite is what survives at 100 TB, so the
   *    posture keeps it on.
-  *  - `TwoPhaseTopKRule` OFF (back to opt-in) — REVERSED by the r14
-  *    optimization round's measurement. The r13 verdict's #5 ask
-  *    ("turn the rules on for the board ... no bench regression") was
-  *    half-landed by the interrupted build round: the conf went
-  *    session-wide but the board was never re-run. The r14 baseline
-  *    board (BENCH_BASELINE_r14.json vs BENCH_IDLE_r13.json) shows the
-  *    session-wide rewrite REGRESSES every `row_number ≤ k` /
-  *    `rn = 1` argmax idiom well past the 1.17× board drift — q09
-  *    0.46→1.27 s (2.8×), q254 1.05→3.18 s (3.0×), q255 0.52→1.72 s
-  *    (3.3×), q257 0.24→0.76 s (3.2×), q190 0.34→0.90 s (2.7×) — with
-  *    zero measured wins. Cause: Spark 4's native
-  *    InferWindowGroupLimit already prunes each map partition to the
-  *    group top-k BEFORE the shuffle (a partial WindowGroupLimit
-  *    node), bounding the per-group reducer at k × map-partitions
-  *    rows with ONE exchange; the rewrite re-does that prune as an
-  *    extra (group, pid)-keyed exchange + window pair on top. The
-  *    declarative GroupedTopK stays on the paths that need the
-  *    explicit two-phase shape (per-probe ANN ranks, PlanAudit-pinned);
-  *    the blanket rewrite is redundant with the engine and strictly
-  *    more expensive. The rule itself stays registered + red-tested
-  *    (TwoPhaseTopKRuleSpec) for sessions that opt in.
   *
   * Correctness posture: the binned rewrite is fixpoint-idempotent and
   * bit-identical to the naive plan (spec-proven), and the full oracle

@@ -143,37 +143,33 @@ object StoreScalingBench {
     * artifact can report MARGINAL fold work (the r13 ADVICE ask). */
   def timeStore(spark: SparkSession, sfDir: String, name: String,
                 repl: Int): StoreTiming = {
-    import graft.streaming.{StreamingDailyCounts, StreamingFirstSeen,
+    import graft.streaming.{BatchStore, StreamingDailyCounts, StreamingFirstSeen,
       StreamingQueries => SQ, StreamingUserMetrics, StreamingVocab}
     val landing = SQ.tmp(s"graft-storescale-$name-landing")
     val store = TempDirs.register(SQ.tmp(s"graft-storescale-$name-store"))
     val ckpt = SQ.tmp(s"graft-storescale-$name-ckpt")
     def sized(df: DataFrame): DataFrame =
       if (repl == 0) df.limit(0) else df
+    def events = sized(replicatedEvents(spark, sfDir, math.max(repl, 1)))
     try {
-      val (run, read) = name match {
-        case "daily" =>
-          val ev = sized(replicatedEvents(spark, sfDir, math.max(repl, 1)))
-          splitByRange(ev, "event_id", landing, Drops)
-          (() => StreamingDailyCounts.run(spark, landing, ev, store, ckpt),
-            () => StreamingDailyCounts.daily(spark, store))
+      val (input, byCol, partial, read) = name match {
+        case "daily" => (events, "event_id", StreamingDailyCounts.partial _,
+          () => StreamingDailyCounts.daily(spark, store))
         case "vocab" =>
-          val docs = sized(replicatedDocs(spark, sfDir, math.max(repl, 1)))
-          splitByRange(docs, "doc_id", landing, Drops)
-          (() => StreamingVocab.run(spark, landing, docs, store, ckpt),
-            () => StreamingVocab.counts(spark, store))
-        case "firstseen" =>
-          val ev = sized(replicatedEvents(spark, sfDir, math.max(repl, 1)))
-          splitByRange(ev, "event_id", landing, Drops)
-          (() => StreamingFirstSeen.run(spark, landing, ev, store, ckpt),
-            () => StreamingFirstSeen.perUser(spark, store))
-        case "usermetrics" =>
-          val ev = sized(replicatedEvents(spark, sfDir, math.max(repl, 1)))
-          splitByRange(ev, "event_id", landing, Drops)
-          (() => StreamingUserMetrics.run(spark, landing, ev, store, ckpt),
-            () => StreamingUserMetrics.metrics(spark, store))
+          (sized(replicatedDocs(spark, sfDir, math.max(repl, 1))), "doc_id",
+            StreamingVocab.partial _, () => StreamingVocab.counts(spark, store))
+        case "firstseen" => (events, "event_id", StreamingFirstSeen.partial _,
+          () => StreamingFirstSeen.perUser(spark, store))
+        case "usermetrics" => (events, "event_id",
+          StreamingUserMetrics.partial _,
+          () => StreamingUserMetrics.metrics(spark, store))
         case other => sys.error(s"unknown store: $other")
       }
+      splitByRange(input, byCol, landing, Drops)
+      // the pipelines' own fold cadence: compaction every 2 batches
+      def run(): Unit = BatchStore.stream(spark, landing, input, ckpt)((b, id) =>
+        BatchStore.append(partial(b), store, id, compactEvery = 2))
+        .awaitTermination()
       // same pre-timing hygiene as Bench.timeQuery: dead intermediates
       // and zombie providers must not bill to this store
       System.gc()
@@ -254,8 +250,6 @@ object StoreScalingBench {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the pipelines' own fold cadence: compaction every 2 batches
-    spark.conf.set(graft.streaming.BatchStore.CompactBatchesConf, "2")
     // JVM/codegen/state-machinery warm-up — a throwaway 1× run of
     // EVERY store kind: each kind compiles its own ingest/fold/read
     // plans on first use, and warming only "daily" (the first cut)

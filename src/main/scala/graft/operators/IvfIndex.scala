@@ -314,9 +314,9 @@ object IvfIndex {
     StageCache.put(s, centroidsKey(dir), cents)
   }
 
-  /** One appended epoch (a foreachBatch body): assign the batch against
+  /** One appended epoch (a micro-batch body): assign the batch against
     * the frozen centroids and land it under its own (cell, epoch)
-    * leaves with dynamic partition overwrite — foreachBatch is
+    * leaves with dynamic partition overwrite — a micro-batch runs
     * at-least-once, and a replayed batchId rewrites exactly its own
     * leaves and nothing else (IncrementalDedup's idempotence argument).
     * `cell` stays the LEADING partition level, so [[topKIndexed]]'s

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * only — never a cache-wide lock held across `f`. A global
   * synchronized-during-compute (the original shape) deadlocks the
   * moment one memoized stage's build runs a streaming query whose
-  * foreachBatch asks the cache for a DIFFERENT key (q90's index build
+  * micro-batch body asks the cache for a DIFFERENT key (q90's index build
   * holds the lock through awaitTermination while its own micro-batch
   * blocks on the centroid entry). Per-key cells keep the
   * single-compute guarantee — concurrent same-key callers block on

@@ -23,6 +23,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
       (children: Seq[Expression]) => CosineSim(children(0), children(1))))
     ext.injectOptimizerRule(s => BinnedIntervalJoinRule(s))
-    ext.injectOptimizerRule(s => TwoPhaseTopKRule(s))
   }
 }

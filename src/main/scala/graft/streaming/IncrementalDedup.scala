@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.MinHashLSH
 
 /** Incremental MinHash-LSH near-dedup over a DOCUMENT STREAM (SURVEY.md
@@ -43,21 +42,21 @@ object IncrementalDedup {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** One ingest step (foreachBatch body, also callable in batch mode):
-    * emits verified near-dup pairs (within-batch + batch-vs-store,
-    * doc_a < doc_b) to `pairsDir` and appends the batch's keys to the
-    * store.
+  /** One ingest step ([[BatchStore.stream]] body, also callable in
+    * batch mode): emits verified near-dup pairs (within-batch +
+    * batch-vs-store, doc_a < doc_b) to `pairsDir` and appends the
+    * batch's keys to the store.
     *
-    * foreachBatch is at-least-once, so a restarted batch may re-run with
-    * the same batchId after a partial write. Every output is therefore
-    * partitioned by batch_id and written with dynamic partition
-    * overwrite: a replay rewrites exactly its own partitions and nothing
-    * else. Cross-batch candidates read only STRICTLY EARLIER batch_ids
+    * A micro-batch body runs at-least-once, so a restarted batch may
+    * re-run with the same batchId after a partial write. Every output
+    * is therefore partitioned by batch_id and written with dynamic
+    * partition overwrite: a replay rewrites exactly its own partitions
+    * and nothing else. Cross-batch candidates read only STRICTLY EARLIER batch_ids
     * from the store, so a replay never joins against its own
     * partially-written keys (which would emit jaccard-1.0 self-pairs and
     * double-count shingles). */
-  def processBatch(spark: SparkSession, storeDir: String, pairsDir: String,
-                   minJaccard: Double)(batch: DataFrame, batchId: Long): Unit = {
+  def processBatch(storeDir: String, pairsDir: String, minJaccard: Double,
+                   compactEvery: Int)(batch: DataFrame, batchId: Long): Unit = {
     val bandsDir = s"$storeDir/bands"; val shDir = s"$storeDir/shingles"
     batch.persist()
     try {
@@ -66,7 +65,7 @@ object IncrementalDedup {
       val within = MinHashLSH.verifiedPairs(batch, minJaccard)
       val hasStore = graft.Fs.exists(bandsDir)
       def earlier(dir: String) =
-        BatchStore.earlier(spark, dir, batchId).drop("batch_id")
+        BatchStore.earlier(batch.sparkSession, dir, batchId).drop("batch_id")
       val pairs = if (!hasStore) within else {
         val cands = earlier(bandsDir).as("o")
           .join(newBands.as("n"),
@@ -82,40 +81,15 @@ object IncrementalDedup {
           greatest(col("doc_a"), col("doc_b")).as("doc_b"),
           col("jaccard")))
       }
-      def writeIdempotent(df: DataFrame, dir: String): Unit =
-        df.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dir)
-      writeIdempotent(pairs, pairsDir)
-      writeIdempotent(newBands, bandsDir)
-      writeIdempotent(newShingles, shDir)
+      // pairsDir is an OUTPUT (append-only, never re-read here), so its
+      // batch_id provenance is left intact for consumers: no fold
+      BatchStore.append(pairs, pairsDir, batchId, Int.MaxValue)
       // LSM fold (BatchStore doctrine): the band/shingle stores are
       // re-read every batch, so their partition count must stay a small
       // constant over unbounded appends. Folds only strictly-earlier
       // (checkpoint-committed) batches — replay idempotence unchanged.
-      // pairsDir is an OUTPUT (append-only, never re-read here), so its
-      // batch_id provenance is left intact for consumers.
-      BatchStore.maybeCompact(spark, bandsDir, batchId)
-      BatchStore.maybeCompact(spark, shDir, batchId)
-      ()
+      BatchStore.append(newBands, bandsDir, batchId, compactEvery)
+      BatchStore.append(newShingles, shDir, batchId, compactEvery)
     } finally { batch.unpersist(blocking = false); () }
-  }
-
-  /** Stream a landing directory of document parquet drops through the
-    * incremental dedup; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, pairsDir: String, checkpointDir: String,
-          minJaccard: Double, maxFilesPerTrigger: Int = 1): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir, pairsDir, minJaccard) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
   }
 }

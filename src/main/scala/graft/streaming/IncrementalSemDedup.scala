@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.KMeans
 
 /** Incremental SemDeDup over an EMBEDDING STREAM (SURVEY.md §2.9 ST1 ×
@@ -24,19 +23,19 @@ import graft.operators.KMeans
   * later batch may log a removal for an earlier-arrived doc, which is
   * an append here, never a retraction.
   *
-  * foreachBatch is at-least-once, so both outputs land partitioned by
-  * batch_id with dynamic partition overwrite, and cross pairs read only
-  * STRICTLY EARLIER batches — the IncrementalDedup idempotence
-  * argument verbatim.
+  * A micro-batch body runs at-least-once, so both outputs land
+  * partitioned by batch_id with dynamic partition overwrite, and cross
+  * pairs read only STRICTLY EARLIER batches — the IncrementalDedup
+  * idempotence argument verbatim.
   */
 object IncrementalSemDedup {
 
-  /** One ingest step (foreachBatch body): appends the batch's
+  /** One ingest step ([[BatchStore.stream]] body): appends the batch's
     * assignments to `storeDir` and its pair-derived removals to
     * `removedDir`. */
-  def processBatch(spark: SparkSession, storeDir: String, removedDir: String,
-                   model: (Array[Int], Array[Array[Double]]), eps: Double)
-                  (batch: DataFrame, batchId: Long): Unit = {
+  def processBatch(storeDir: String, removedDir: String,
+                   model: (Array[Int], Array[Array[Double]]), eps: Double,
+                   compactEvery: Int)(batch: DataFrame, batchId: Long): Unit = {
     val assigned = KMeans.assignModel(batch, model)
       .select(col("cid"), col("vec_id"), col("emb"))
       .persist()
@@ -49,7 +48,7 @@ object IncrementalSemDedup {
         .select(col("ib").as("vec_id"))
       val hasStore = graft.Fs.exists(storeDir)
       val removed = if (!hasStore) within else {
-        val earlier = BatchStore.earlier(spark, storeDir, batchId)
+        val earlier = BatchStore.earlier(batch.sparkSession, storeDir, batchId)
           .select(col("cid"), col("vec_id").as("ia"), col("emb").as("ea"))
         val cross = earlier.join(b, "cid")
           .filter(col("ia") =!= col("ib") &&
@@ -57,38 +56,13 @@ object IncrementalSemDedup {
           .select(greatest(col("ia"), col("ib")).as("vec_id"))
         within.unionByName(cross)
       }
-      def writeIdempotent(df: DataFrame, dir: String): Unit =
-        df.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(dir)
-      writeIdempotent(removed.distinct(), removedDir)
-      writeIdempotent(assigned, storeDir)
       // LSM fold (BatchStore doctrine): the arrival store is re-read
       // every batch (and `removed` on every summary), so both stay a
       // small constant number of partitions over unbounded appends.
       // Folds only strictly-earlier batches — replay-idempotent.
-      BatchStore.maybeCompact(spark, storeDir, batchId)
-      BatchStore.maybeCompact(spark, removedDir, batchId)
-      ()
+      BatchStore.append(removed.distinct(), removedDir, batchId, compactEvery)
+      BatchStore.append(assigned, storeDir, batchId, compactEvery)
     } finally { assigned.unpersist(blocking = false); () }
-  }
-
-  /** Stream a landing directory of embedding drops through the
-    * incremental dedup; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, removedDir: String, checkpointDir: String,
-          model: (Array[Int], Array[Array[Double]]), eps: Double): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir, removedDir, model, eps) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
   }
 
   /** The q89 summary off the accumulated state: per cluster, arrivals

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming A/B monitor (ST17 — q166 as a stream): the
   * continuously-watched experiment dashboard. Each micro-batch lands
@@ -17,33 +16,11 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingAbTest {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-(user, type) counts. */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of event drops into the partial-count
-    * store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read per-user counts: sum of the live partials. */
   def userCounts(spark: SparkSession, storeDir: String): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-(type, day) event-count store — the mergeable daily
   * unit TWO read tails share:
@@ -26,35 +25,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingDailyCounts {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-(type, day) counts. */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(col("event_type"),
         expr("unix_micros(ts) DIV 86400000000").as("day"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of event drops into the partial-count
-    * store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read daily counts: sum of the live partial partitions.
     * Column `x` matches cusumView's input; q198 renames it to `n` for

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming first-seen store (ST22 — q210's cumulative-distinct curve
   * as a stream): each micro-batch lands its PARTIAL per-(type, user)
@@ -19,35 +18,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingFirstSeen {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-(type, user) first/last day. */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(col("event_type"), col("user_id"),
         expr("unix_micros(ts) DIV 86400000000").as("day"))
       .groupBy(col("event_type"), col("user_id"))
       .agg(min(col("day")).as("fday"), max(col("day")).as("lday"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of event drops into the partial store;
-    * AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read per-(type, user) rollup: (MIN, MAX) over the live
     * partial partitions — cumulativeDistinctView's exact input. */

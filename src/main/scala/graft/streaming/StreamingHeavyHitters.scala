@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming heavy hitters — q135's Count-Min top-k as an INCREMENTAL
   * pipeline over an arriving document stream (the q72/q92/q107 store
@@ -14,7 +13,7 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * Counts are ADDITIVE, so the store needs no per-key streaming state
   * at all: the vocabulary-sized state lives in the partitioned parquet
-  * store (LSM-folded by [[BatchStore]] under the conf'd trigger — a
+  * store (LSM-folded by [[BatchStore]] under the fold trigger — a
   * fold concatenates strictly-earlier rows, which a sum view cannot
   * observe), not in the engine's state store. That is the 100 TB
   * posture: executor state stays bounded per batch, and the merge is a
@@ -22,34 +21,12 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingHeavyHitters {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-token counts. */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(explode(split(trim(col("text")), "\\s+")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of document drops into the partial-
-    * count store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read total counts: sum of the live partial partitions. */
   def totals(spark: SparkSession, storeDir: String): DataFrame =

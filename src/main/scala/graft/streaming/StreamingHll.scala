@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming HyperLogLog — q145's distinct-token estimator as an
   * INCREMENTAL pipeline over an arriving document stream (the
@@ -23,31 +22,9 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingHll {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-language HLL registers. */
+  def partial(batch: DataFrame): DataFrame =
     graft.operators.SketchQueries.hllRegisters(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of document drops into the partial-
-    * register store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read registers: max over the live partial partitions —
     * feed straight into [[graft.operators.SketchQueries.hllSummary]]. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming KMV sketch store (ST23 — q154's cross-source overlap as a
   * stream): each micro-batch of documents lands its PARTIAL per-source
@@ -22,35 +21,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingKmv {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-source k smallest trigram hashes. */
+  def partial(batch: DataFrame): DataFrame =
     graft.operators.GroupedTopK.topK(
       graft.operators.SketchQueries.kmvHashes(batch),
       Seq("source"), Seq(col("h").asc),
       graft.operators.SketchQueries.KmvK)
       .select(col("source"), col("h"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of document drops into the partial-
-    * sketch store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read sketch union: the live partial sketches, deduped by
     * the view's own distinct — kmvOverlapView's exact input. */

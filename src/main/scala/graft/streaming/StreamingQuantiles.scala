@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming mergeable quantiles — base-2 log-bin histograms over an
   * arriving document stream (the q140/q146 store idiom): each
@@ -26,33 +25,11 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQuantiles {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-(lang, bin) log-histogram counts. */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(col("lang"), (length(bin(col("n_chars"))) - 1).as("b"))
       .groupBy(col("lang"), col("b")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of document drops into the partial-
-    * histogram store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read histogram: sum of the live partial partitions. */
   def histogram(spark: SparkSession, storeDir: String): DataFrame =

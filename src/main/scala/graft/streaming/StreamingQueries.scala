@@ -45,45 +45,34 @@ object StreamingQueries {
   private[graft] def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Run `body` with the BatchStore fold triggered every 2 live
-    * partitions (instead of the production default): the 3-drop
-    * incremental dedup runs then compact their stores MID-RUN, so the
-    * q72/q92 oracle hashes re-prove the fold exact on every round. */
-  /** Shuffle width for the per-batch jobs INSIDE the store pipelines'
-    * foreachBatch (partial-count aggregation + fold rewrite) — the
-    * foreachBatch sibling of `runAppend`'s statePartitions knob (r15).
-    * Every store's per-batch partial is tiny BY CONSTRUCTION (a
-    * (type, day) grid, a per-user rollup, a k-min sketch), yet the
-    * inner jobs inherited the session's full shuffle width and AQE
-    * does not coalesce them (streaming plans disable it), so each
-    * micro-batch paid a session-wide fan-out of near-empty tasks plus
-    * that many part files into the store partition (re-read by every
-    * later batch and fold). Per-pipeline sizing knob exactly like
-    * choosing spark.sql.shuffle.partitions per job on a cluster;
-    * production sizing is a deployment choice via this conf. Counts /
-    * mins / maxes / k-min cuts are width-independent (the
-    * PartitioningInvarianceSpec property), and every store oracle row
-    * re-proves output equality each round. A/B at sf0.1 (6 pipelines,
-    * same session order): 35.3 → 27.7 s (0.78×), all six faster. */
-  val BatchShufflePartitionsConf = "spark.graft.stream.batchShufflePartitions"
-  val DefaultBatchShufflePartitions = 8
+  /** Fold cadence of the registered store pipelines: every 2 live
+    * partitions instead of the production default, so their 3-drop runs
+    * fold MID-RUN and every store oracle row re-proves the fold exact. */
+  private val CompactEvery = 2
 
-  private def withCompactionEvery2[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.getOption(BatchStore.CompactBatchesConf)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set(BatchStore.CompactBatchesConf, "2")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get(BatchShufflePartitionsConf,
-        DefaultBatchShufflePartitions.toString))
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prev match {
-        case Some(v) => s.conf.set(BatchStore.CompactBatchesConf, v)
-        case None    => s.conf.unset(BatchStore.CompactBatchesConf)
-      }
-    }
+  /** Lifecycle of a registered store pipeline: `land` writes the drops
+    * into a fresh landing dir, [[BatchStore.stream]] drains them through
+    * `step(root)` into a fresh store root, and the landing and
+    * checkpoint are deleted once the run ends. The root outlives the
+    * call (the caller's merge-on-read view reads it lazily) and is
+    * reaped at JVM exit. */
+  private def runStore(name: String, input: DataFrame, land: String => Unit)(
+      step: String => (DataFrame, Long) => Unit): String = {
+    val landing = tmp(s"graft-$name-landing")
+    land(landing)
+    val root = graft.TempDirs.register(tmp(s"graft-$name-store"))
+    val ckpt = tmp(s"graft-$name-ckpt")
+    BatchStore.stream(input.sparkSession, landing, input, ckpt)(step(root))
+      .awaitTermination()
+    Seq(landing, ckpt).foreach(rmTree)
+    root
   }
+
+  /** The [[runStore]] step of a single-table store: append the batch's
+    * partial at the pipelines' fold cadence. */
+  private def appendPartial(partial: DataFrame => DataFrame)(store: String)(
+      batch: DataFrame, batchId: Long): Unit =
+    BatchStore.append(partial(batch), store, batchId, CompactEvery)
 
   /** Recursive delete — inputs a bounded run no longer needs must not
     * accumulate corpus copies under /tmp across CI rounds. */
@@ -382,20 +371,14 @@ object StreamingQueries {
     // the ApproxOracle exports (which cover the WHOLE corpus).
     "q72_stream_neardup" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val landing = tmp("graft-q72-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val storeDir = tmp("graft-q72-store")
-      val pairsDir = graft.TempDirs.register(tmp("graft-q72-pairs"))
-      val ckpt = tmp("graft-q72-ckpt")
       // threshold 2 over 3 drops: the band/shingle stores LSM-fold
       // MID-RUN, so the oracle hash proves the fold exact every round
-      withCompactionEvery2(s) {
-        IncrementalDedup.run(s, landing, docs, storeDir, pairsDir,
-          ckpt, graft.operators.ApproxOracle.MinJaccard)
-      }
+      val root = runStore("q72", docs, splitById(docs, "doc_id", _, 3))(dir =>
+        IncrementalDedup.processBatch(s"$dir/store", s"$dir/pairs",
+          graft.operators.ApproxOracle.MinJaccard, CompactEvery))
       // only the pairs table outlives the run (read back lazily)
-      Seq(landing, storeDir, ckpt).foreach(rmTree)
-      s.read.parquet(pairsDir).select("doc_a", "doc_b", "jaccard")
+      rmTree(s"$root/store")
+      s.read.parquet(s"$root/pairs").select("doc_a", "doc_b", "jaccard")
     }),
 
     // ST26 × D25: q225's Chao1 unseen-vocabulary estimate as a STREAM
@@ -407,14 +390,8 @@ object StreamingQueries {
     // oracle IS q225's batch SQL.
     "q229_stream_chao1" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "source", "text")
-      val landing = tmp("graft-q229-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q229-store"))
-      val ckpt = tmp("graft-q229-ckpt")
-      withCompactionEvery2(s) {
-        StreamingVocab.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q229", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingVocab.partial))
       graft.operators.QualityQueries.chao1View(
         StreamingVocab.counts(s, store))
     }),
@@ -425,14 +402,8 @@ object StreamingQueries {
     // the IDENTICAL zipfFitView; oracle IS q137's batch SQL.
     "q230_stream_zipf" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "source", "text")
-      val landing = tmp("graft-q230-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q230-store"))
-      val ckpt = tmp("graft-q230-ckpt")
-      withCompactionEvery2(s) {
-        StreamingVocab.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q230", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingVocab.partial))
       graft.operators.TextQueries.zipfFitView(
         StreamingVocab.counts(s, store)
           .groupBy(col("tok")).agg(sum(col("c")).as("cnt")))
@@ -608,14 +579,8 @@ object StreamingQueries {
     // boundaries and fold timing must be invisible.
     "q107_stream_upsert" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q107-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q107-store"))
-      val ckpt = tmp("graft-q107-ckpt")
-      withCompactionEvery2(s) {
-        UpsertStore.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q107", events, splitByTime(events, _, 3))(
+        appendPartial(UpsertStore.partial))
       UpsertStore.view(s, store)
         .select("event_id", "ts", "user_id", "event_type", "value")
     }),
@@ -629,14 +594,8 @@ object StreamingQueries {
     // re-proven on rows, schema and hash every round.
     "q140_stream_heavy" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-      val landing = tmp("graft-q140-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q140-store"))
-      val ckpt = tmp("graft-q140-ckpt")
-      withCompactionEvery2(s) {
-        StreamingHeavyHitters.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q140", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingHeavyHitters.partial))
       graft.operators.SketchQueries.cmsTopK(
         StreamingHeavyHitters.totals(s, store))
     }),
@@ -652,14 +611,8 @@ object StreamingQueries {
     "q146_stream_hll" -> ((s, d) => {
       import graft.operators.SketchQueries
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
-      val landing = tmp("graft-q146-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q146-store"))
-      val ckpt = tmp("graft-q146-ckpt")
-      withCompactionEvery2(s) {
-        StreamingHll.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q146", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingHll.partial))
       SketchQueries.hllSummary(StreamingHll.registers(s, store),
           Tables.documents(s, d).select(col("lang")).distinct())
         .select(col("lang"), lit(SketchQueries.HllM.toLong).as("m_regs"),
@@ -676,14 +629,8 @@ object StreamingQueries {
     "q153_stream_quantiles" -> ((s, d) => {
       import graft.operators.SketchQueries
       val docs = Tables.documents(s, d).select("doc_id", "lang", "n_chars")
-      val landing = tmp("graft-q153-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q153-store"))
-      val ckpt = tmp("graft-q153-ckpt")
-      withCompactionEvery2(s) {
-        StreamingQuantiles.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q153", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingQuantiles.partial))
       SketchQueries.logHistQuantiles(StreamingQuantiles.histogram(s, store))
     }),
 
@@ -697,14 +644,8 @@ object StreamingQueries {
     "q217_stream_kmv" -> ((s, d) => {
       import graft.operators.SketchQueries
       val docs = Tables.documents(s, d).select("doc_id", "source", "text")
-      val landing = tmp("graft-q217-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q217-store"))
-      val ckpt = tmp("graft-q217-ckpt")
-      withCompactionEvery2(s) {
-        StreamingKmv.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q217", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingKmv.partial))
       SketchQueries.kmvOverlapView(StreamingKmv.sketchUnion(s, store))
     }),
 
@@ -715,14 +656,8 @@ object StreamingQueries {
     // and the oracle IS q162's batch SQL.
     "q167_stream_cusum" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q167-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q167-store"))
-      val ckpt = tmp("graft-q167-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q167", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.cusumView(
         StreamingDailyCounts.daily(s, store))
     }),
@@ -735,14 +670,8 @@ object StreamingQueries {
     // so stream == batch BY ALGEBRA; oracle IS q177's batch SQL.
     "q198_stream_decayed_pop" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q198-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q198-store"))
-      val ckpt = tmp("graft-q198-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q198", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.decayedPopularityView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -755,14 +684,8 @@ object StreamingQueries {
     // production shape.
     "q202_stream_seasonality" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q202-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q202-store"))
-      val ckpt = tmp("graft-q202-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q202", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.seasonalityView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -774,14 +697,8 @@ object StreamingQueries {
     // one-shot batch BY ALGEBRA; oracle IS q204's batch SQL.
     "q205_stream_ewma" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q205-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q205-store"))
-      val ckpt = tmp("graft-q205-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q205", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.ewmaTrendView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -794,14 +711,8 @@ object StreamingQueries {
     // one-shot batch BY ALGEBRA; oracle IS q219's batch SQL.
     "q220_stream_ols" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q220-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q220-store"))
-      val ckpt = tmp("graft-q220-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q220", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.olsTrendView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -813,14 +724,8 @@ object StreamingQueries {
     // q224's batch SQL.
     "q228_stream_acf" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q228-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q228-store"))
-      val ckpt = tmp("graft-q228-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q228", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.acfView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -832,14 +737,8 @@ object StreamingQueries {
     // oracle IS q236's batch SQL.
     "q240_stream_mk" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q240-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q240-store"))
-      val ckpt = tmp("graft-q240-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q240", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.mannKendallView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -851,14 +750,8 @@ object StreamingQueries {
     // batch SQL.
     "q243_stream_seasonal_mk" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q243-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q243-store"))
-      val ckpt = tmp("graft-q243-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q243", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.seasonalMannKendallView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -872,14 +765,8 @@ object StreamingQueries {
     // ALGEBRA; oracle IS q244's batch SQL.
     "q245_stream_delta_ratio" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q245-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q245-store"))
-      val ckpt = tmp("graft-q245-ckpt")
-      withCompactionEvery2(s) {
-        StreamingUserMetrics.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q245", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingUserMetrics.partial))
       graft.operators.RelationalQueries.deltaRatioView(
         StreamingUserMetrics.metrics(s, store))
     }),
@@ -890,14 +777,8 @@ object StreamingQueries {
     // add, so stream == batch BY ALGEBRA; oracle IS q260's batch SQL.
     "q262_stream_kendall" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q262-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q262-store"))
-      val ckpt = tmp("graft-q262-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q262", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.kendallTauView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -909,14 +790,8 @@ object StreamingQueries {
     // ALGEBRA; oracle IS q265's batch SQL.
     "q268_stream_seasonal_strength" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q268-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q268-store"))
-      val ckpt = tmp("graft-q268-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q268", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.seasonalStrengthView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -928,14 +803,8 @@ object StreamingQueries {
     // q272's batch SQL.
     "q279_stream_cox_stuart" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q279-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q279-store"))
-      val ckpt = tmp("graft-q279-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q279", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.coxStuartView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -946,14 +815,8 @@ object StreamingQueries {
     // summed grid; oracle IS q273's batch SQL.
     "q280_stream_turning_point" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q280-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q280-store"))
-      val ckpt = tmp("graft-q280-ckpt")
-      withCompactionEvery2(s) {
-        StreamingDailyCounts.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q280", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingDailyCounts.partial))
       graft.operators.RelationalQueries.turningPointView(
         StreamingDailyCounts.daily(s, store).withColumnRenamed("x", "n"))
     }),
@@ -965,14 +828,8 @@ object StreamingQueries {
     "q281_stream_yule_k" -> ((s, d) => {
       val docs = graft.Tables.documents(s, d)
         .select("doc_id", "source", "text")
-      val landing = tmp("graft-q281-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q281-store"))
-      val ckpt = tmp("graft-q281-ckpt")
-      withCompactionEvery2(s) {
-        StreamingVocab.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q281", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingVocab.partial))
       graft.operators.QualityQueries.yuleKView(StreamingVocab.counts(s, store))
     }),
 
@@ -983,14 +840,8 @@ object StreamingQueries {
     // batch SQL.
     "q263_stream_simpson" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "source", "text")
-      val landing = tmp("graft-q263-landing")
-      splitById(docs, "doc_id", landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q263-store"))
-      val ckpt = tmp("graft-q263-ckpt")
-      withCompactionEvery2(s) {
-        StreamingVocab.run(s, landing, docs, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q263", docs, splitById(docs, "doc_id", _, 3))(
+        appendPartial(StreamingVocab.partial))
       graft.operators.QualityQueries.simpsonDiversityView(
         StreamingVocab.counts(s, store))
     }),
@@ -1005,14 +856,8 @@ object StreamingQueries {
     // batch SQL.
     "q264_stream_nelson_aalen" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q264-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q264-store"))
-      val ckpt = tmp("graft-q264-ckpt")
-      withCompactionEvery2(s) {
-        StreamingFirstSeen.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q264", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingFirstSeen.partial))
       graft.operators.RelationalQueries.nelsonAalenView(
         graft.operators.RelationalQueries.survivalFromLifetimes(
           StreamingFirstSeen.perUser(s, store)))
@@ -1026,14 +871,8 @@ object StreamingQueries {
     // q210's batch SQL — itself the brute quadratic distinct count.
     "q211_stream_cumdistinct" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q211-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q211-store"))
-      val ckpt = tmp("graft-q211-ckpt")
-      withCompactionEvery2(s) {
-        StreamingFirstSeen.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q211", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingFirstSeen.partial))
       graft.operators.RelationalQueries.cumulativeDistinctView(
         StreamingFirstSeen.perUser(s, store))
     }),
@@ -1045,14 +884,8 @@ object StreamingQueries {
     // exactly where the batch casts. Oracle IS q181's batch SQL.
     "q197_stream_rfm" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q197-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q197-store"))
-      val ckpt = tmp("graft-q197-ckpt")
-      withCompactionEvery2(s) {
-        StreamingRfm.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q197", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingRfm.partial))
       graft.operators.RelationalQueries.rfmView(
         StreamingRfm.perUser(s, store))
     }),
@@ -1064,14 +897,8 @@ object StreamingQueries {
     // batches); oracle IS q166's batch SQL.
     "q172_stream_ab" -> ((s, d) => {
       val events = ev(s, d)
-      val landing = tmp("graft-q172-landing")
-      splitByTime(events, landing, 3)
-      val store = graft.TempDirs.register(tmp("graft-q172-store"))
-      val ckpt = tmp("graft-q172-ckpt")
-      withCompactionEvery2(s) {
-        StreamingAbTest.run(s, landing, events, store, ckpt)
-      }
-      rmTree(landing); rmTree(ckpt)
+      val store = runStore("q172", events, splitByTime(events, _, 3))(
+        appendPartial(StreamingAbTest.partial))
       graft.operators.RelationalQueries.abTestView(
         StreamingAbTest.userCounts(s, store))
     }),
@@ -1101,7 +928,7 @@ object StreamingQueries {
     // from the FIRST time slice and frozen (standard IVF append
     // semantics); each micro-batch lands in the cell-partitioned layout
     // under its own epoch leaves via dynamic partition overwrite, so
-    // at-least-once foreachBatch replays are idempotent. The probe then
+    // at-least-once micro-batch replays are idempotent. The probe then
     // runs the standard statically-pruned layout search (q79's) over an
     // index that was never built in one shot. Oracle: the assignment is
     // a pure per-row function of (emb, frozen centroids) — ApproxOracle
@@ -1135,23 +962,17 @@ object StreamingQueries {
       import graft.operators.{KMeans, VectorQueries}
       val e = VectorQueries.emb(s, d)
       val model = KMeans.lloydModel(e, VectorQueries.semK(e.count()), iters = 2)
-      val landing = tmp("graft-q92-landing")
       val w = e.count() / 3 + 1
       // zero-origin fixed-width slices: w doubles as the q90 bootstrap
       // cut, so the historic `count/3 + 1` width is kept verbatim (a
       // min/max-derived width would move the frozen-centroid grid)
-      writeSlicedLanding(e.withColumn("__slice",
-        expr(s"CAST(vec_id DIV ${w}L AS INT)")), landing, 3)
-      val root = graft.TempDirs.register(tmp("graft-q92"))
-      val (store, removedDir) = (s"$root/store", s"$root/removed")
-      val ckpt = tmp("graft-q92-ckpt")
+      val land = writeSlicedLanding(e.withColumn("__slice",
+        expr(s"CAST(vec_id DIV ${w}L AS INT)")), _: String, 3)
       // like q72: fold the arrival store mid-run, oracle-checked
-      withCompactionEvery2(s) {
-        IncrementalSemDedup.run(s, landing, e, store, removedDir, ckpt,
-          model, VectorQueries.SemEps)
-      }
-      Seq(landing, ckpt).foreach(rmTree)
-      IncrementalSemDedup.summary(s, store, removedDir)
+      val root = runStore("q92", e, land)(dir =>
+        IncrementalSemDedup.processBatch(s"$dir/store", s"$dir/removed",
+          model, VectorQueries.SemEps, CompactEvery))
+      IncrementalSemDedup.summary(s, s"$root/store", s"$root/removed")
     })
   )
 
@@ -1161,7 +982,7 @@ object StreamingQueries {
 
   /** q90's streamed index build, memoized per (session, sf) like q79's
     * batch build: bootstrap centroids from the first of three vec_id
-    * slices, then stream all three through foreachBatch appends. */
+    * slices, then stream all three through [[BatchStore.stream]]. */
   private def incIvfDir(s: SparkSession, d: String): String =
     graft.operators.StageCache.dirFor(s, s"ivf_inc_index:$d") {
       import graft.operators.{IvfIndex, VectorQueries}
@@ -1182,13 +1003,8 @@ object StreamingQueries {
       IvfIndex.bootstrapAppendable(e.filter(col("vec_id") < w), dir0,
         VectorQueries.ivfNList(w))
       val ckpt = tmp("graft-q90-ckpt")
-      s.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-        .writeStream
-        .foreachBatch((b: DataFrame, id: Long) => IvfIndex.appendEpoch(b, dir0, id))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
+      BatchStore.stream(s, landing, e, ckpt)(IvfIndex.appendEpoch(_, dir0, _))
+        .awaitTermination()
       Seq(landing, ckpt).foreach(rmTree)
       dir0
     }

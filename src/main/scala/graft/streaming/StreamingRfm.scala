@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming RFM segmentation (ST18 — q181 as a stream): each
   * micro-batch lands its PARTIAL per-user (max day, event count,
@@ -19,36 +18,14 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingRfm {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-user (max day, count, decimal sum). */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(col("user_id"),
         expr("unix_micros(ts) DIV 86400000000").as("day"), col("value"))
       .groupBy(col("user_id"))
       .agg(max(col("day")).as("last_day"), count(lit(1)).as("f"),
         sum(col("value").cast("decimal(38,6)")).as("m"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of event drops into the partial store;
-    * AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read per-user rollup: (MAX, SUM, SUM) over the live
     * partial partitions, the decimal cast applied once after the

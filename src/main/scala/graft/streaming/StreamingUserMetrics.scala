@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-(event_type, user_id) metric store — the EXPERIMENT
   * unit of the mergeable-store family (the vocabulary store's sibling
@@ -29,35 +28,13 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingUserMetrics {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-(type, user) (count, value cents). */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(col("event_type"), col("user_id"),
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"))
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("ne"), sum(col("cents")).as("sc"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of event drops into the partial
-    * metric store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read per-(event_type, user_id) metrics: sum of the live
     * partial partitions — the (ne, sc) columns deltaRatioView

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-(source, token) count store — the VOCABULARY unit of
   * the mergeable-store family (the daily-count store's sibling on a
@@ -28,36 +27,14 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingVocab {
 
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
+  /** This batch's partial: per-(source, token) counts. */
+  def partial(batch: DataFrame): DataFrame =
     batch
       .select(col("source"),
         explode(split(trim(col("text")), "\\s+")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of document drops into the partial
-    * vocabulary store; AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
 
   /** Merge-on-read per-(source, token) counts: sum of the live
     * partial partitions — the `c` column chao1View consumes. */

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** CDC-style latest-per-key materialization under streaming ingest —
   * the lakehouse upsert view (Hudi/Delta's merge-on-read shape): each
@@ -21,49 +20,22 @@ import org.apache.spark.sql.streaming.Trigger
   * Scale shape: per batch one window over the batch keyed by user_id
   * (corpus-cardinality groups — no single-reducer funnel) and one
   * partition write; the view reads |keys| × live-partition rows, with
-  * the partition count pinned by the conf'd LSM fold. At 100 TB the
+  * the partition count pinned by the LSM fold. At 100 TB the
   * view cost is the store scan, never the raw history.
   */
 object UpsertStore {
 
-  private def latestPerKey(df: DataFrame): DataFrame = {
+  /** This batch's partial: the latest row per touched key (argmax by
+    * (ts, event_id)) — also the view's merge rule, and callable in batch
+    * mode for a backfill. */
+  def partial(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** foreachBatch body — also callable in batch mode for a backfill. */
-  def processBatch(spark: SparkSession, storeDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    latestPerKey(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
-    // the store is re-read by every view call; fold under the conf'd
-    // trigger (strictly-earlier batches only — replay unchanged)
-    BatchStore.maybeCompact(spark, storeDir, batchId)
-  }
-
-  /** Stream a landing directory of event drops into the upsert store;
-    * AvailableNow = bounded catch-up run. */
-  def run(spark: SparkSession, landingDir: String, schemaFrom: DataFrame,
-          storeDir: String, checkpointDir: String,
-          maxFilesPerTrigger: Int = 1): Unit = {
-    spark.readStream
-      .schema(schemaFrom.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .foreachBatch(processBatch(spark, storeDir) _)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-  }
-
   /** The merge-on-read view: latest row per key across live partitions. */
   def view(spark: SparkSession, storeDir: String): DataFrame =
-    latestPerKey(BatchStore.liveRows(spark, storeDir).drop("batch_id"))
+    partial(BatchStore.liveRows(spark, storeDir).drop("batch_id"))
 }

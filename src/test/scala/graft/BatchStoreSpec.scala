@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{KMeans, MinHashLSH}
-import graft.streaming.{BatchStore, IncrementalDedup, IncrementalSemDedup}
+import graft.streaming.{BatchStore, IncrementalDedup, IncrementalSemDedup,
+  StreamingQueries}
 
 /** The LSM fold for batch_id-partitioned streaming stores: results are
   * UNCHANGED across mid-run compaction (the round-6 verdict's done
@@ -127,19 +128,16 @@ class BatchStoreSpec extends SparkTestBase {
     val all = batches.flatten
     def runWith(thr: Int): Set[(Long, Long)] = {
       val store = tmp("bs_mh_store"); val pairs = tmp("bs_mh_pairs")
-      spark.conf.set(BatchStore.CompactBatchesConf, thr.toString)
-      try {
-        val step = IncrementalDedup.processBatch(spark, store, pairs, 0.5) _
-        batches.zipWithIndex.foreach { case (b, i) =>
-          step(b.toDF("doc_id", "text"), i.toLong) }
-        if (thr <= batches.size) {
-          assert(BatchStore.frontier(s"$store/bands") > 0, "compaction never fired")
-          assert(BatchStore.livePartitionCount(s"$store/bands") <= thr)
-          assert(BatchStore.livePartitionCount(s"$store/shingles") <= thr)
-        }
-        spark.read.parquet(pairs).select("doc_a", "doc_b")
-          .as[(Long, Long)].collect().toSet
-      } finally spark.conf.unset(BatchStore.CompactBatchesConf)
+      val step = IncrementalDedup.processBatch(store, pairs, 0.5, thr) _
+      batches.zipWithIndex.foreach { case (b, i) =>
+        step(b.toDF("doc_id", "text"), i.toLong) }
+      if (thr <= batches.size) {
+        assert(BatchStore.frontier(s"$store/bands") > 0, "compaction never fired")
+        assert(BatchStore.livePartitionCount(s"$store/bands") <= thr)
+        assert(BatchStore.livePartitionCount(s"$store/shingles") <= thr)
+      }
+      spark.read.parquet(pairs).select("doc_a", "doc_b")
+        .as[(Long, Long)].collect().toSet
     }
     val compacted = runWith(2)
     val untouched = runWith(100)
@@ -153,25 +151,22 @@ class BatchStoreSpec extends SparkTestBase {
   test("replay after a fold is still idempotent") {
     val batches = corpus5()
     val store = tmp("bs_rp_store"); val pairs = tmp("bs_rp_pairs")
-    spark.conf.set(BatchStore.CompactBatchesConf, "2")
-    try {
-      val step = IncrementalDedup.processBatch(spark, store, pairs, 0.5) _
-      batches.zipWithIndex.foreach { case (b, i) =>
-        step(b.toDF("doc_id", "text"), i.toLong) }
-      assert(BatchStore.frontier(s"$store/bands") > 0)
-      def snapshot() = (
-        spark.read.parquet(pairs).select("doc_a", "doc_b", "jaccard")
-          .as[(Long, Long, Double)].collect().sorted.toSeq,
-        BatchStore.liveRows(spark, s"$store/bands").count(),
-        BatchStore.liveRows(spark, s"$store/shingles").count())
-      val before = snapshot()
-      // the LAST batch re-fires with the same id after a fold already
-      // folded every earlier batch — the strictly-earlier read must hit
-      // exactly the fold, never its own landed partition
-      step(batches.last.toDF("doc_id", "text"), (batches.size - 1).toLong)
-      assert(snapshot() == before, "replay after fold changed state")
-      assert(!before._1.exists(p => p._1 == p._2), "self-pairs emitted")
-    } finally spark.conf.unset(BatchStore.CompactBatchesConf)
+    val step = IncrementalDedup.processBatch(store, pairs, 0.5, 2) _
+    batches.zipWithIndex.foreach { case (b, i) =>
+      step(b.toDF("doc_id", "text"), i.toLong) }
+    assert(BatchStore.frontier(s"$store/bands") > 0)
+    def snapshot() = (
+      spark.read.parquet(pairs).select("doc_a", "doc_b", "jaccard")
+        .as[(Long, Long, Double)].collect().sorted.toSeq,
+      BatchStore.liveRows(spark, s"$store/bands").count(),
+      BatchStore.liveRows(spark, s"$store/shingles").count())
+    val before = snapshot()
+    // the LAST batch re-fires with the same id after a fold already
+    // folded every earlier batch — the strictly-earlier read must hit
+    // exactly the fold, never its own landed partition
+    step(batches.last.toDF("doc_id", "text"), (batches.size - 1).toLong)
+    assert(snapshot() == before, "replay after fold changed state")
+    assert(!before._1.exists(p => p._1 == p._2), "self-pairs emitted")
   }
 
   test("incremental SemDeDup: mid-run compaction leaves the summary unchanged") {
@@ -194,19 +189,16 @@ class BatchStoreSpec extends SparkTestBase {
     def runWith(thr: Int): Seq[(Long, Long, Long)] = {
       val root = tmp("bs_sem")
       val (store, removed) = (s"$root/store", s"$root/removed")
-      spark.conf.set(BatchStore.CompactBatchesConf, thr.toString)
-      try {
-        val step = IncrementalSemDedup.processBatch(
-          spark, store, removed, model, 0.95) _
-        batches.zipWithIndex.foreach { case (b, i) =>
-          step(b.toDF("vec_id", "emb"), i.toLong) }
-        if (thr <= batches.size) {
-          assert(BatchStore.frontier(store) > 0, "compaction never fired")
-          assert(BatchStore.livePartitionCount(store) <= thr)
-        }
-        IncrementalSemDedup.summary(spark, store, removed)
-          .as[(Long, Long, Long)].collect().sorted.toSeq
-      } finally spark.conf.unset(BatchStore.CompactBatchesConf)
+      val step = IncrementalSemDedup.processBatch(
+        store, removed, model, 0.95, thr) _
+      batches.zipWithIndex.foreach { case (b, i) =>
+        step(b.toDF("vec_id", "emb"), i.toLong) }
+      if (thr <= batches.size) {
+        assert(BatchStore.frontier(store) > 0, "compaction never fired")
+        assert(BatchStore.livePartitionCount(store) <= thr)
+      }
+      IncrementalSemDedup.summary(spark, store, removed)
+        .as[(Long, Long, Long)].collect().sorted.toSeq
     }
     val compacted = runWith(2)
     val untouched = runWith(100)
@@ -214,6 +206,34 @@ class BatchStoreSpec extends SparkTestBase {
     // the construction plants removals: every group has 15 near-identical
     // members, so all but the first of each group is removed
     assert(compacted.map(_._3).sum == n - 4, compacted)
+  }
+
+  test("stream runner: batch width on the stream's own session only; compactEvery folds") {
+    val base = tmp("bs_runner")
+    val (landing, store) = (s"$base/landing", s"$base/store")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(landing))
+    (0 until 3).foreach { b =>
+      StreamingQueries.drop(Seq((b.toLong, s"v$b")).toDF("id", "v"), landing, b)
+    }
+    val width = "spark.sql.shuffle.partitions"
+    val callerWidth = spark.conf.get(width)
+    assert(callerWidth != BatchStore.BatchShufflePartitions.toString,
+      "the caller must start at a different width for the check to bite")
+    // (caller's width, batch session's width) as seen inside each body
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    BatchStore.stream(spark, landing, Seq((0L, "")).toDF("id", "v"),
+        s"$base/ckpt") { (batch, batchId) =>
+      seen.add((spark.conf.get(width), batch.sparkSession.conf.get(width)))
+      BatchStore.append(batch, store, batchId, compactEvery = 2)
+    }.awaitTermination()
+    assert(seen.size == 3, s"one body call per drop: $seen")
+    seen.forEach(w => assert(w == ((callerWidth,
+      BatchStore.BatchShufflePartitions.toString)), s"widths seen: $w"))
+    assert(spark.conf.get(width) == callerWidth, "caller conf was written")
+    // 3 drops at compactEvery = 2: the fold published mid-run
+    assert(Fs.childNames(store).exists(_.startsWith("_compacted_")),
+      Fs.childNames(store).mkString(","))
+    assert(ids(BatchStore.liveRows(spark, store)) == Set(0L, 1L, 2L))
   }
 
   test("snapshotRead survives a compact+sweep racing the scan; plain liveRows does not") {
@@ -249,7 +269,7 @@ class BatchStoreSpec extends SparkTestBase {
     assert(BatchStore.snapshotRead(spark, dir)(_.count()) == 8)
   }
 
-  test("snapshotRead exhaustion: budget honored from the conf, torn-frontier diagnosis surfaced") {
+  test("snapshotRead exhaustion: maxAttempts bounds retries; torn-frontier named") {
     val dir = tmp("bs_snap_exh")
     mkStore(dir, 6)
     // a body that publishes a fresh compaction on EVERY attempt but
@@ -262,25 +282,21 @@ class BatchStoreSpec extends SparkTestBase {
       BatchStore.compact(spark, dir, next); next += 1
       0L
     }
-    spark.conf.set(BatchStore.SnapshotAttemptsConf, "3")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        BatchStore.snapshotRead(spark, dir)(alwaysTorn)
-      }
-      // the conf'd budget (3) bounds the attempts, and the message
-      // carries the torn-frontier diagnosis plus the knob to turn
-      assert(attempts == 3, s"conf'd budget not honored: $attempts attempts")
-      assert(ex.getMessage.contains("3 attempts"), ex.getMessage)
-      assert(ex.getMessage.contains("torn-frontier"), ex.getMessage)
-      assert(ex.getMessage.contains(BatchStore.SnapshotAttemptsConf),
-        ex.getMessage)
-      // an explicit maxAttempts still overrides the conf
-      attempts = 0
-      intercept[IllegalArgumentException] {
-        BatchStore.snapshotRead(spark, dir, maxAttempts = 2)(alwaysTorn)
-      }
-      assert(attempts == 2, s"explicit budget not honored: $attempts")
-    } finally spark.conf.unset(BatchStore.SnapshotAttemptsConf)
+    val ex = intercept[IllegalArgumentException] {
+      BatchStore.snapshotRead(spark, dir, maxAttempts = 3)(alwaysTorn)
+    }
+    // the budget (3) bounds the attempts, and the message carries the
+    // torn-frontier diagnosis plus the knob to turn
+    assert(attempts == 3, s"budget not honored: $attempts attempts")
+    assert(ex.getMessage.contains("3 attempts"), ex.getMessage)
+    assert(ex.getMessage.contains("torn-frontier"), ex.getMessage)
+    assert(ex.getMessage.contains("maxAttempts"), ex.getMessage)
+    // the default budget is 5
+    attempts = 0
+    intercept[IllegalArgumentException] {
+      BatchStore.snapshotRead(spark, dir)(alwaysTorn)
+    }
+    assert(attempts == 5, s"default budget not honored: $attempts")
     // the store itself is fine once the churn stops
     assert(BatchStore.snapshotRead(spark, dir)(_.count()) == 6)
   }

@@ -106,6 +106,16 @@ class BenchHelpersSpec extends AnyFunSuite {
     assert(cr.length < 500 && cr.contains("\"value\":157.22032342"), cr)
   }
 
+  test("compact bench line: a negative-exponent stage time sums instead of throwing") {
+    // a sub-millisecond stage prints as 8.4E-4; the stage scan must take
+    // the exponent's sign, or the line dies between the artifact print
+    // and the file mirror + spark.stop
+    val full = """{"metric":"total","value":1.5,"stage_build":{"x":8.4E-4},""" +
+      """"errors":{},"n_failed":0,"sf":"sf0.01"}"""
+    val c = Bench.compactLine(full)
+    assert(c.contains("\"stage_build_total\":8.4E-4"), c)
+  }
+
   test("driver-regime parser reads both the clean and the log-tail wrapper shapes") {
     import BenchArtifactGateSpec.parseDriverRegime
     val clean = """{"metric":"total","machine_canary_ms_pre":52.2,

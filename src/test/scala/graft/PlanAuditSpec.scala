@@ -302,13 +302,10 @@ class PlanAuditSpec extends SparkTestBase {
         !p.contains("BroadcastNestedLoopJoin"),
       "vote counting must stay on graph-key equi-joins\n" + p)
     // the only RANK is the per-src argmax over ≤ KnnGraphK vote rows
-    // (WindowGroupLimit nodes are the rank-limit pushdown — welcome).
-    // Under the session-wide TwoPhaseTopKRule the argmax idiom plans
-    // as the local+final window PAIR; any window beyond that pair is
-    // a regression.
+    // (WindowGroupLimit nodes are the rank-limit pushdown — welcome);
+    // any window beyond that one is a regression.
     val nw = p.linesIterator.count(_.trim.matches("""\(\d+\) Window"""))
-    assert(nw <= 1 || (nw == 2 && p.contains("__graft_lrn")),
-      "extra windows crept into the vote chain\n" + p)
+    assert(nw <= 1, "extra windows crept into the vote chain\n" + p)
   }
 
   test("q158 random walks: hop joins stay equi; argmin is agg, not window") {
@@ -1643,12 +1640,12 @@ class PlanAuditSpec extends SparkTestBase {
 
   test("q09 window rank: native WindowGroupLimit prunes before the " +
     "shuffle; the blanket two-phase rewrite stays off") {
-    // r14 posture: TwoPhaseTopKRule is opt-in again — the session-wide
-    // rewrite measured 2.4–3.3× slower on every rn≤k / rn=1 idiom
-    // (BENCH_BASELINE_r14 vs BENCH_IDLE_r13) because Spark 4's
-    // InferWindowGroupLimit already does the pre-shuffle prune with
-    // one exchange. Pin BOTH halves of that posture: the native prune
-    // is present, and the rewrite's extra window pair is not.
+    // A blanket two-phase rewrite of rn≤k measured 2.4–3.3× slower on
+    // every rn≤k / rn=1 idiom (BENCH_BASELINE_r14 vs BENCH_IDLE_r13)
+    // because Spark 4's InferWindowGroupLimit already does the
+    // pre-shuffle prune with one exchange. Pin BOTH halves: the native
+    // prune is present, and no extra local-rank window pair (its
+    // `__graft_lrn` column) is.
     val p = plan("q09_window_rank")
     assert(p.contains("WindowGroupLimit"),
       s"native rank-limit pushdown missing — the top-k window would " +

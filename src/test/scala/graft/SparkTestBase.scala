@@ -12,8 +12,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    // the same posture the runtime mains use (extensions + both
-    // Catalyst rewrites ON), so every spec exercises the rewritten
+    // the same posture the runtime mains use (extensions + the binned
+    // interval-join rewrite ON), so every spec exercises the rewritten
     // plans — see GraftSession
     val s = GraftSession.tune(SparkSession.builder()
       .master("local[4]")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.MinHashLSH
-import graft.streaming.IncrementalDedup
+import graft.streaming.{BatchStore, IncrementalDedup}
 
 /** Incremental (streaming) near-dedup == one-shot batch near-dedup over
   * the same corpus — the ST1×L2 correctness contract. */
@@ -33,7 +33,8 @@ class StreamingDedupSpec extends SparkTestBase {
     val (b1, b2) = corpus()
     val store = java.nio.file.Files.createTempDirectory("dedup_store").toString
     val pairs = java.nio.file.Files.createTempDirectory("dedup_pairs").toString
-    val step = IncrementalDedup.processBatch(spark, store, pairs, 0.5) _
+    val step = IncrementalDedup.processBatch(store, pairs, 0.5,
+      BatchStore.DefaultCompactBatches) _
     step(b1.toDF("doc_id", "text"), 0L)
     step(b2.toDF("doc_id", "text"), 1L)
     val streamed = spark.read.parquet(pairs)
@@ -52,7 +53,8 @@ class StreamingDedupSpec extends SparkTestBase {
     val (b1, b2) = corpus()
     val store = java.nio.file.Files.createTempDirectory("dedup_replay").toString
     val pairs = java.nio.file.Files.createTempDirectory("dedup_rpairs").toString
-    val step = IncrementalDedup.processBatch(spark, store, pairs, 0.5) _
+    val step = IncrementalDedup.processBatch(store, pairs, 0.5,
+      BatchStore.DefaultCompactBatches) _
     step(b1.toDF("doc_id", "text"), 0L)
     step(b2.toDF("doc_id", "text"), 1L)
     def snapshot() = (
@@ -88,8 +90,9 @@ class StreamingDedupSpec extends SparkTestBase {
       }
       d.listFiles().foreach(_.delete()); d.delete()
     }
-    IncrementalDedup.run(spark, landing, b1.toDF("doc_id", "text"),
-      s"$base/store", s"$base/pairs", s"$base/ckpt", minJaccard = 0.5)
+    BatchStore.stream(spark, landing, b1.toDF("doc_id", "text"), s"$base/ckpt")(
+      IncrementalDedup.processBatch(s"$base/store", s"$base/pairs", 0.5,
+        BatchStore.DefaultCompactBatches)).awaitTermination()
     val streamed = spark.read.parquet(s"$base/pairs")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val oneShot = MinHashLSH.verifiedPairs((b1 ++ b2).toDF("doc_id", "text"), 0.5)

@@ -251,6 +251,18 @@ class StreamingQueriesSpec extends SparkTestBase {
     assert(last == corpus, s"$last != $corpus")
   }
 
+  test("q107: streamed upsert view equals the batch latest-per-key over raw events") {
+    // the registered path: 3 drops, store folded mid-run (compactEvery
+    // = 2); the mirror is the oracle's row_number() = 1 derivation
+    val got = q("q107_stream_upsert")
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").desc, col("event_id").desc)
+    val want = events.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1).drop("rn")
+    assert(got.count() > 0, "no upsert rows streamed")
+    assertSame(got, want, "q107")
+  }
+
   test("q72: incremental near-dup pairs equal the one-shot batch pairs") {
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val got = q("q72_stream_neardup")

@@ -36,18 +36,23 @@ class UpsertStoreSpec extends SparkTestBase {
     val landing = StreamingQueries.tmp("graft-upsert-spec-landing")
     val store = TempDirs.register(StreamingQueries.tmp("graft-upsert-spec-store"))
     val ckpt = StreamingQueries.tmp("graft-upsert-spec-ckpt")
+    def append(batch: DataFrame, batchId: Long): Unit =
+      BatchStore.append(UpsertStore.partial(batch), store, batchId,
+        BatchStore.DefaultCompactBatches)
+    def catchUp(): Unit =
+      BatchStore.stream(spark, landing, events, ckpt)(append).awaitTermination()
     try {
       // stage 1: two drops, run to completion
       StreamingQueries.drop(chunk(0), landing, 0)
       StreamingQueries.drop(chunk(1), landing, 1)
-      UpsertStore.run(spark, landing, events, store, ckpt)
+      catchUp()
       val mid = UpsertStore.view(spark, store).collect().map(_.toString).toSet
       assert(mid == expectedView(chunk(0).unionAll(chunk(1))),
         "mid-stream view must equal the batch argmax over arrived data")
 
       // stage 2: a later drop arrives; SAME checkpoint resumes
       StreamingQueries.drop(chunk(2), landing, 2)
-      UpsertStore.run(spark, landing, events, store, ckpt)
+      catchUp()
       val full = UpsertStore.view(spark, store).collect().map(_.toString).toSet
       assert(full == expectedView(events),
         "caught-up view must equal the batch argmax over everything")
@@ -64,7 +69,7 @@ class UpsertStoreSpec extends SparkTestBase {
 
       // at-least-once replay: re-running the LAST batch body with the
       // same batchId rewrites only its own partition — view unchanged
-      UpsertStore.processBatch(spark, store)(chunk(2), 2L)
+      append(chunk(2), 2L)
       val replayed = UpsertStore.view(spark, store).collect()
         .map(_.toString).toSet
       assert(replayed == full, "replay must be idempotent")

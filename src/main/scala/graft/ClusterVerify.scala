@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Multi-process shuffle validation — the closest a single box gets to
   * a real cluster: `local-cluster[2,4,2048]` launches two SEPARATE
@@ -21,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   * launcher needs is passed via spark.executorEnv below, so the run no
   * longer dies with "Cannot find any build directories" when
   * SPARK_SCALA_VERSION isn't exported).
-  * Prints one JSON line; exits nonzero on any mismatch.
+  * Prints one JSON line ([[Measure.emit]]); exits nonzero on any
+  * mismatch.
   */
 object ClusterVerify {
 
@@ -180,48 +183,32 @@ object ClusterVerify {
         scala.util.Properties.versionNumberString.split("\\.").take(2).mkString("."))
       .getOrCreate()
     cluster.sparkContext.setLogLevel("WARN")
-    // wait for the two worker JVMs to register (driver + 2 = 3) — and
-    // REQUIRE them, or the run silently degrades to driver-only and
-    // validates nothing
-    val deadline = System.currentTimeMillis() + 120000
-    def nExecNow = cluster.sparkContext.statusTracker.getExecutorInfos.length
-    while (nExecNow < 3 && System.currentTimeMillis() < deadline)
-      Thread.sleep(500)
-    val nExec = nExecNow
-    require(nExec >= 3,
-      s"local-cluster registered only $nExec executor(s); expected driver + 2 workers")
-    // a crash inside the cluster phase (e.g. a forcedBranches require
-    // tripping on a serialization bug) must still produce the JSON
-    // artifact — automation reads it; "prints one line" is the contract
-    val got =
-      try Right(runAll(cluster, sfDir))
-      catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")
+    sys.exit(Measure.emit(cluster) {
+      // wait for the two worker JVMs to register (driver + 2 = 3) — and
+      // REQUIRE them, or the run silently degrades to driver-only and
+      // validates nothing
+      val deadline = System.currentTimeMillis() + 120000
+      def nExecNow = cluster.sparkContext.statusTracker.getExecutorInfos.length
+      while (nExecNow < 3 && System.currentTimeMillis() < deadline)
+        Thread.sleep(500)
+      val nExec = nExecNow
+      require(nExec >= 3,
+        s"local-cluster registered only $nExec executor(s); expected driver + 2 workers")
+      // a crash inside the cluster phase (e.g. a forcedBranches require
+      // tripping on a serialization bug) must still produce the JSON
+      // artifact — automation reads it; "prints one line" is the contract
+      val got =
+        try Right(runAll(cluster, sfDir))
+        catch { case e: Throwable => Left(Measure.describe(e)) }
+      val names = expected.keys.toSeq.sorted
+      val mismatches = got match {
+        case Right(g) => names.filter(q => expected(q) != g(q))
+        case Left(_)  => names // nothing comparable — report everything
       }
-    cluster.stop()
-
-    val names = expected.keys.toSeq.sorted
-    val mismatches = got match {
-      case Right(g) => names.filter(q => expected(q) != g(q))
-      case Left(_)  => names // nothing comparable — report everything
-    }
-    // escape control characters too (exception messages can carry
-    // newlines/tabs) — the artifact is one-line JSON automation parses
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val errJson = got.left.toOption
-      .map(m => s""""error":${jsonStr(m)},""")
-      .getOrElse("")
-    val json =
-      s"""{"metric":"cluster_verify","queries":${names.size},""" +
-        s""""executors":$nExec,"mismatches":${mismatches.size},""" +
-        errJson +
-        s""""mismatched":[${mismatches.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""sf":"$sfDir"}"""
-    println(); println(json); Console.out.flush()
-    if (mismatches.nonEmpty || got.isLeft) sys.exit(1)
+      ("metric" -> "cluster_verify") ~ ("queries" -> names.size) ~
+        ("executors" -> nExec) ~ ("mismatches" -> mismatches.size) ~
+        ("error" -> got.left.toOption) ~ ("mismatched" -> mismatches) ~
+        ("n_failed" -> mismatches.size) ~ ("sf" -> sfDir)
+    })
   }
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's standard session posture — applied by every runtime
-  * main (Verify, Bench, ScalingBench, ClusterVerify) and the shared
-  * test session:
+  * main (through [[Measure.session]], and ClusterVerify's two
+  * deployments) and the shared test session:
   *
   *  - `graft.plans.GraftExtensions` injected (SQL-surface vector
   *    functions + the binned interval-join rule);

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Corpus-scale demonstration of the dedup pipeline (the LLM-data
   * counterpart of `chess.App bench`): generate a synthetic document
@@ -76,20 +78,14 @@ object PipelineBench {
   /** One full pipeline pass at `n` docs: per-stage seconds + found
     * counts. Factored out of main so the scale SWEEP (and the growth
     * spec) can run the identical stages at several n. */
-  /** Locale-independent fixed-point formatting: the f"" interpolator
-    * follows the default locale, and a comma decimal separator (de_DE,
-    * fr_FR) would corrupt the JSON artifact. */
-  private def fmt(v: Double, digits: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-
   case class Result(n: Int, timings: Seq[(String, Double)],
                     counts: Seq[(String, Long)]) {
     def total: Double = timings.map(_._2).sum
-    def json: String =
-      s"""{"metric":"pipeline_bench","n_docs":$n,""" +
-        timings.map { case (k, v) => s""""${k}_s":${fmt(v, 2)}""" }.mkString(",") +
-        s""","total_s":${fmt(total, 2)},"docs_per_s":${(n / total).toInt},""" +
-        counts.map { case (k, v) => s""""$k":$v""" }.mkString(",") + "}"
+    def json: JObject =
+      ("metric" -> "pipeline_bench") ~ ("n_docs" -> n) ~
+        JObject(timings.map { case (k, v) => JField(s"${k}_s", JDouble(v)) }.toList) ~
+        ("total_s" -> total) ~ ("docs_per_s" -> (n / total).toInt) ~
+        JObject(counts.map { case (k, v) => JField(k, JLong(v)) }.toList)
   }
 
   def runOnce(spark: SparkSession, n: Int): Result = {
@@ -182,63 +178,48 @@ object PipelineBench {
     * are exactly linear by planted construction), written to
     * PIPELINE_BENCH.json. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")(0)
-      catch { case _: Throwable => "-1" }
-
-    if (args.headOption.contains("sweep")) {
-      val sizes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
-                  else Seq(100000, 200000, 400000)
-      val loadPre = loadavg()
-      // warm the JVM/codegen BEFORE the first size, or ~10s of one-time
-      // startup bills to the smallest run and systematically UNDERSTATES
-      // the fitted exponent (the growth spec warms up for the same reason)
-      runOnce(spark, 2000)
-      spark.catalog.clearCache()
-      // TWO passes over the size list, exponent fitted on the per-size
-      // MINIMUM: this box's effective CPU capacity oscillates on a
-      // minutes timescale (identical code measured 63s and 201s for the
-      // same 100k run), and the min is the standard interference-robust
-      // point estimate. Every raw run stays in the artifact.
-      val results = (1 to 2).flatMap(_ => sizes).map { n =>
-        val r = runOnce(spark, n); println(r.json)
-        // drop the finished size's cached plans and nudge the
-        // ContextCleaner to reap its localCheckpoint blocks before the
-        // next (larger) size — leftover storage memory from run k
-        // starves run k+1's broadcast builds
+    val spark = Measure.session()
+    val sweep = args.headOption.contains("sweep")
+    sys.exit(Measure.emit(spark, Some("PIPELINE_BENCH.json").filter(_ => sweep)) {
+      val regime = Measure.regime()
+      if (sweep) {
+        val sizes = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
+                    else Seq(100000, 200000, 400000)
+        // warm the JVM/codegen BEFORE the first size, or ~10s of one-time
+        // startup bills to the smallest run and systematically UNDERSTATES
+        // the fitted exponent (the growth spec warms up for the same reason)
+        runOnce(spark, 2000)
         spark.catalog.clearCache()
-        System.gc()
-        r
-      }
-      val best = sizes.map(n => n -> results.filter(_.n == n).map(_.total).min)
-      // the fit needs >=2 distinct sizes; emit null (valid JSON) rather
-      // than a NaN that breaks every downstream json.load
-      val expJson =
-        if (sizes.distinct.size >= 2)
-          fmt(growthExponent(best.map { case (n, t) => (n.toDouble, t) }), 3)
-        else "null"
-      val json = s"""{"metric":"pipeline_sweep","sizes":${sizes.mkString("[", ",", "]")},""" +
-        s""""time_growth_exponent":$expJson,""" +
-        s""""best_totals":${best.map { case (n, t) => s""""$n":${fmt(t, 2)}""" }
-          .mkString("{", ",", "}")},""" +
-        s""""loadavg_pre":$loadPre,"loadavg_post":${loadavg()},""" +
-        s""""runs":[${results.map(_.json).mkString(",")}]}"""
-      println(json)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("PIPELINE_BENCH.json"), json)
-    } else {
-      val n = args.headOption.map(_.toInt).getOrElse(100000)
-      println(runOnce(spark, n).json)
-    }
-    spark.stop()
+        // TWO passes over the size list, exponent fitted on the per-size
+        // MINIMUM: this box's effective CPU capacity oscillates on a
+        // minutes timescale (identical code measured 63s and 201s for the
+        // same 100k run), and the min is the standard interference-robust
+        // point estimate. Every raw run stays in the artifact.
+        val results = (1 to 2).flatMap(_ => sizes).map { n =>
+          val r = runOnce(spark, n); println(Measure.render(r.json))
+          // drop the finished size's cached plans and nudge the
+          // ContextCleaner to reap its localCheckpoint blocks before the
+          // next (larger) size — leftover storage memory from run k
+          // starves run k+1's broadcast builds
+          spark.catalog.clearCache()
+          System.gc()
+          r
+        }
+        val best = sizes.map(n => n -> results.filter(_.n == n).map(_.total).min)
+        // the fit needs >=2 distinct sizes; emit null (valid JSON) rather
+        // than a NaN that breaks every downstream json.load
+        val exponent =
+          if (sizes.distinct.size >= 2)
+            JDouble(growthExponent(best.map { case (n, t) => (n.toDouble, t) }))
+          else JNull
+        ("metric" -> "pipeline_sweep") ~ ("sizes" -> sizes) ~
+          ("time_growth_exponent" -> exponent) ~
+          ("best_totals" -> JObject(best.map { case (n, t) => JField(n.toString, JDouble(t)) }.toList)) ~
+          regime.close() ~ ("runs" -> JArray(results.map(_.json).toList))
+      } else
+        runOnce(spark, args.headOption.map(_.toInt).getOrElse(100000)).json ~
+          regime.close()
+    })
   }
 
   /** Least-squares slope of log(t) vs log(n) — the growth exponent. */

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for registered BATCH queries to one
   * text file per query — the optimization rounds' plan-evidence tool
   * (plans/r14/<query>_{before,after}.txt). Streaming queries are
@@ -18,19 +16,12 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("plans/r14")
     val suffix = args.lift(2).getOrElse("before")
-    val streamingNames = SparkEntry.streamingQueries.keySet
-    val all = SparkEntry.queries.view.filterKeys(!streamingNames(_)).toMap
+    val all = SparkEntry.batchQueries
     val names =
       if (args.length > 3) args.drop(3).toSeq else all.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { n =>
+    try names.foreach { n =>
       all.get(n) match {
         case None => System.err.println(s"[plandump] no such batch query: $n")
         case Some(fn) =>
@@ -44,7 +35,6 @@ object PlanDump {
               System.err.println(s"[plandump] FAILED $n: ${e.getMessage}")
           }
       }
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Empirical scaling-curve record (the r11 verdict's #1 ask): every
   * batch query timed at TWO scale factors in one session, so the
@@ -14,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * Methodology mirrors Bench: median of 3 per (query, sf) with the
   * dead-state reap outside the timed window, shared stages warmed
   * up-front at BOTH SFs and billed under "stage_build" (so index /
-  * decode builds don't masquerade as query-time scaling), loadavg
-  * self-certification. Small-SF times carry fixed session overhead
+  * decode builds don't masquerade as query-time scaling), the
+  * [[Measure.Regime]] host fields. Small-SF times carry fixed session overhead
   * (~50–300 ms), so the artifact records both raw times and the
   * ratio; ScalingGateSpec's outlier rule conditions on an absolute
   * floor for exactly that reason.
@@ -25,17 +26,6 @@ import org.apache.spark.sql.SparkSession
   * `SCALING_r{N}.json`.
   */
 object ScalingBench {
-
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split("\\s+")(0)
-    catch { case _: Throwable => "-1" }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   /** Scale factor from a testdata dir name ("…/sf0.01" → 0.01). The
     * data ratio is DERIVED from the chosen pair, not assumed 10×: run
@@ -52,9 +42,7 @@ object ScalingBench {
   /** Pure assembly so a spec can exercise the JSON shape. */
   def render(sfSmall: String, sfBig: String,
              small: Seq[Bench.QResult], big: Seq[Bench.QResult],
-             stageBuild: Map[String, Double],
-             loadPre: String, loadPost: String,
-             contended: Boolean): (String, Int) = {
+             stageBuild: Map[String, Double], host: JObject): JObject = {
     val dataRatio = sfOf(sfBig) / sfOf(sfSmall)
     require(dataRatio > 1.0,
       s"sf_big ($sfBig) must be larger than sf_small ($sfSmall)")
@@ -64,22 +52,15 @@ object ScalingBench {
     val entries = ok.map { s =>
       val b = bigM(s.name)
       val ratio = b.sec / math.max(s.sec, 1e-3)
-      s"${jsonStr(s.name)}:{" +
-        s""""t_small":${s.sec},"t_big":${b.sec},"ratio":$ratio}"""
-    }.mkString("{", ",", "}")
-    val errs = (small ++ big).filter(_.err.isDefined)
-      .map(r => s"${jsonStr(r.name)}:${jsonStr(r.err.get)}")
-      .mkString("{", ",", "}")
+      JField(s.name, ("t_small" -> s.sec) ~ ("t_big" -> b.sec) ~ ("ratio" -> ratio))
+    }
     val stages = stageBuild.toSeq.sortBy(_._1)
-      .map { case (n, t) => s"${jsonStr(n)}:$t" }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"scaling","sf_small":${jsonStr(sfSmall)},""" +
-        s""""sf_big":${jsonStr(sfBig)},"data_ratio":$dataRatio,""" +
-        s""""queries":$entries,"stage_build":$stages,""" +
-        s""""errors":$errs,"n_failed":${(small ++ big).count(_.err.isDefined)},""" +
-        s""""loadavg_pre":$loadPre,"loadavg_post":$loadPost,""" +
-        s""""contended":$contended}"""
-    (json, if ((small ++ big).exists(_.err.isDefined)) 1 else 0)
+      .map { case (n, t) => JField(n, JDouble(t)) }
+    ("metric" -> "scaling") ~ ("sf_small" -> sfSmall) ~ ("sf_big" -> sfBig) ~
+      ("data_ratio" -> dataRatio) ~ ("queries" -> JObject(entries.toList)) ~
+      ("stage_build" -> JObject(stages.toList)) ~
+      Measure.failures((small ++ big).collect { case Bench.QResult(n, _, Some(e)) => n -> e }) ~
+      host
   }
 
   def main(args: Array[String]): Unit = {
@@ -87,53 +68,27 @@ object ScalingBench {
       "/root/testdata/sf0.01")
     val sfBig = sys.env.getOrElse("SPARK_GRAFT_SF_BIG",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val streamingNames = SparkEntry.streamingQueries.keySet
-    val batch = SparkEntry.queries.view.filterKeys(!streamingNames(_)).toMap
-    // JVM/codegen warm-up, then the shared stages at BOTH SFs so the
-    // one-time builds never land inside a timed window
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      batch.get("q01_pricing_summary")
-        .foreach(fn => fn(spark, sfSmall).count())
-    } catch { case _: Throwable => }
-    val stageBuild =
-      graft.operators.SharedStages.warm(spark, sfSmall)
-        .map { case (k, v) => s"small:$k" -> v } ++
-      graft.operators.SharedStages.warm(spark, sfBig)
-        .map { case (k, v) => s"big:$k" -> v }
-    // settle before sampling: the stage warm itself drives loadavg
-    // past the threshold, and a self-inflicted "contended" flag would
-    // void every otherwise-clean artifact
-    val deadline = System.currentTimeMillis() + 300000L
-    while (System.currentTimeMillis() < deadline &&
-           loadavg().toDoubleOption.exists(_ > Bench.MaxLoadDefault)) {
-      System.err.println(s"[scaling] settling: loadavg ${loadavg()}")
-      Thread.sleep(10000)
-    }
-    val loadPre = loadavg()
-    val maxLoad = sys.env.get("SPARK_GRAFT_MAX_LOAD")
-      .flatMap(_.toDoubleOption).getOrElse(Bench.MaxLoadDefault)
-    val contended = loadPre.toDoubleOption.exists(_ > maxLoad)
-    val names = batch.toSeq.sortBy(_._1)
-    val small = names.map { case (n, f) =>
-      Bench.timeQuery(spark, sfSmall, n, f, runs = 3) }
-    val big = names.map { case (n, f) =>
-      Bench.timeQuery(spark, sfBig, n, f, runs = 3) }
-    val (json, exitCode) = render(sfSmall, sfBig, small, big,
-      stageBuild, loadPre, loadavg(), contended)
-    println(); println(json); Console.out.flush()
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("scaling_out.json"), json)
-    catch { case _: Throwable => }
-    spark.stop()
-    if (exitCode != 0) sys.exit(exitCode)
+    val spark = Measure.session()
+    sys.exit(Measure.emit(spark, Some("scaling_out.json")) {
+      // JVM/codegen warm-up, then the shared stages at BOTH SFs so the
+      // one-time builds never land inside a timed window
+      Measure.warm(spark, sfSmall)
+      val stageBuild =
+        graft.operators.SharedStages.warm(spark, sfSmall)
+          .map { case (k, v) => s"small:$k" -> v } ++
+        graft.operators.SharedStages.warm(spark, sfBig)
+          .map { case (k, v) => s"big:$k" -> v }
+      // settle before sampling: the stage warm itself drives loadavg
+      // past the threshold, and a self-inflicted "contended" flag would
+      // void every otherwise-clean artifact
+      Measure.settle(300000L)
+      val regime = Measure.regime()
+      val names = SparkEntry.batchQueries.toSeq.sortBy(_._1)
+      val small = names.map { case (n, f) =>
+        Bench.timeQuery(spark, sfSmall, n, f, runs = 3) }
+      val big = names.map { case (n, f) =>
+        Bench.timeQuery(spark, sfBig, n, f, runs = 3) }
+      render(sfSmall, sfBig, small, big, stageBuild, regime.close())
+    })
   }
 }

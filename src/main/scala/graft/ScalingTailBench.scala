@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Second-decade scale evidence for the SCALING_r13 outliers (the r13
   * verdict's #2 ask): the per-query scaling curve stops at one decade
@@ -49,17 +51,6 @@ object ScalingTailBench {
   final case class TailTiming(name: String, tSmall: Double, tMid: Double,
                               tBig: Double, err: Option[String])
 
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split("\\s+")(0)
-    catch { case _: Throwable => "-1" }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   /** Build the 10× corpus dir from `midDir` (documents + lineitem +
     * orders — the only tables the tail queries read). Returns the dir. */
   def buildBigDir(spark: SparkSession, midDir: String): String = {
@@ -103,79 +94,43 @@ object ScalingTailBench {
       val t0 = System.nanoTime()
       fn(spark, dir).count()
       Right((System.nanoTime() - t0) / 1e9)
-    } catch { case e: Throwable =>
-      Left(s"${e.getClass.getSimpleName}: " +
-        Option(e.getMessage).getOrElse("").take(200))
-    }
+    } catch { case e: Throwable => Left(Measure.describe(e)) }
 
   /** Pure assembly so a spec can exercise the JSON shape; exponents
     * are log10 of each decade's time ratio. */
   def render(small: String, mid: String, timings: Seq[TailTiming],
-             loadPre: String, loadPost: String,
-             contended: Boolean): (String, Int) = {
-    val ok = timings.filter(_.err.isEmpty)
-    val entries = ok.map { t =>
+             host: JObject): JObject = {
+    val entries = timings.filter(_.err.isEmpty).map { t =>
       val e12 = math.log10(t.tMid / math.max(t.tSmall, 1e-3))
       val e23 = math.log10(t.tBig / math.max(t.tMid, 1e-3))
-      s"${jsonStr(t.name)}:{" +
-        s""""t_small":${t.tSmall},"t_mid":${t.tMid},"t_big":${t.tBig},""" +
-        s""""exp12":$e12,"exp23":$e23}"""
-    }.mkString("{", ",", "}")
-    val errs = timings.filter(_.err.isDefined)
-      .map(t => s"${jsonStr(t.name)}:${jsonStr(t.err.get)}")
-      .mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"scaling_tail","sf_small":${jsonStr(small)},""" +
-        s""""sf_mid":${jsonStr(mid)},"data_ratio":$Repl,""" +
-        s""""queries":$entries,"errors":$errs,""" +
-        s""""n_failed":${timings.count(_.err.isDefined)},""" +
-        s""""loadavg_pre":$loadPre,"loadavg_post":$loadPost,""" +
-        s""""contended":$contended}"""
-    (json, if (timings.exists(_.err.isDefined)) 1 else 0)
+      JField(t.name, ("t_small" -> t.tSmall) ~ ("t_mid" -> t.tMid) ~
+        ("t_big" -> t.tBig) ~ ("exp12" -> e12) ~ ("exp23" -> e23))
+    }
+    ("metric" -> "scaling_tail") ~ ("sf_small" -> small) ~ ("sf_mid" -> mid) ~
+      ("data_ratio" -> Repl) ~ ("queries" -> JObject(entries.toList)) ~
+      Measure.failures(timings.collect { case TailTiming(n, _, _, _, Some(e)) => n -> e }) ~
+      host
   }
 
   def main(args: Array[String]): Unit = {
     val small = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL",
       "/root/testdata/sf0.01")
     val mid = sys.env.getOrElse("SPARK_GRAFT_SF_BIG", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val big = buildBigDir(spark, mid)
-    // JVM/codegen warm-up off the measured path
-    try { spark.range(1000).selectExpr("sum(id)").collect()
-      SparkEntry.queries("q07_scan_agg")(spark, small).count(); () }
-    catch { case _: Throwable => }
-    val deadline = System.currentTimeMillis() + 300000L
-    while (System.currentTimeMillis() < deadline &&
-           loadavg().toDoubleOption.exists(_ > Bench.MaxLoadDefault)) {
-      System.err.println(s"[scaling-tail] settling: loadavg ${loadavg()}")
-      Thread.sleep(10000)
-    }
-    val loadPre = loadavg()
-    val maxLoad = sys.env.get("SPARK_GRAFT_MAX_LOAD")
-      .flatMap(_.toDoubleOption).getOrElse(Bench.MaxLoadDefault)
-    val contended = loadPre.toDoubleOption.exists(_ > maxLoad)
-    val timings = TailQueries.map { q =>
-      (time1(spark, q, small), time1(spark, q, mid), time1(spark, q, big)) match {
-        case (Right(a), Right(b), Right(c)) => TailTiming(q, a, b, c, None)
-        case (ra, rb, rc) =>
-          val err = Seq(ra, rb, rc).collect { case Left(e) => e }.mkString("; ")
-          TailTiming(q, -1, -1, -1, Some(err))
+    val spark = Measure.session()
+    sys.exit(Measure.emit(spark, Some("scaling_tail_out.json")) {
+      val big = buildBigDir(spark, mid)
+      Measure.warm(spark, small)
+      Measure.settle(300000L)
+      val regime = Measure.regime()
+      val timings = TailQueries.map { q =>
+        (time1(spark, q, small), time1(spark, q, mid), time1(spark, q, big)) match {
+          case (Right(a), Right(b), Right(c)) => TailTiming(q, a, b, c, None)
+          case (ra, rb, rc) =>
+            val err = Seq(ra, rb, rc).collect { case Left(e) => e }.mkString("; ")
+            TailTiming(q, -1, -1, -1, Some(err))
+        }
       }
-    }
-    val (json, exitCode) = render(small, mid, timings,
-      loadPre, loadavg(), contended)
-    println(); println(json); Console.out.flush()
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("scaling_tail_out.json"), json)
-    catch { case _: Throwable => }
-    spark.stop()
-    if (exitCode != 0) sys.exit(exitCode)
+      render(small, mid, timings, regime.close())
+    })
   }
 }

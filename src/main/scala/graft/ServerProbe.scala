@@ -8,21 +8,17 @@ import org.apache.spark.sql.SparkSession
   * bench board's accumulated session state got heavier" without
   * re-running the whole board.
   *
-  * Usage: `sbt "runMain graft.ServerProbe [cpus] [rounds]"` — prints
-  * one line per round.
+  * Usage: `sbt "runMain graft.ServerProbe [cpus] [rounds]"` — runs
+  * [[rounds]] under the [[Measure.session]] posture and logs one line
+  * per round.
   */
 object ServerProbe {
-  def main(args: Array[String]): Unit = {
-    val cpus = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val rounds = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+
+  /** The server leg Bench and this main share: one cached sample store
+    * (the bundled sample games), then `n` rounds of 8 clients × 12
+    * mixed explore/retraction requests against it, each round after a
+    * GC. Returns each round's requests per second. */
+  def rounds(spark: SparkSession, n: Int): Seq[Double] = {
     import spark.implicits._
     import graft.chess._
     val games = ChessIngest.parseGames(spark,
@@ -35,11 +31,19 @@ object ServerProbe {
       s"""{"token":"b1","query":{"positions":[{"fen":"${Position.StartFen}"}],"fetchChildren":true}}""",
       s"""{"token":"b2","query":{"positions":[{"fen":"${Position.StartFen}","move":"e2e4"}],"fetchChildren":true}}""",
       s"""{"token":"b3","retractions":{"fen":"$e2e4","synthesize":true}}""")
-    (1 to rounds).foreach { r =>
-      val (rps, n) = ChessServer.throughput(spark, agg, lines,
+    try (1 to n).map { r =>
+      System.gc()
+      val (rps, reqs) = ChessServer.throughput(spark, agg, lines,
         clients = 8, perClient = 12, games = Some(games))
-      println(f"[server-probe] round $r: $rps%.2f req/s over $n requests")
-    }
-    spark.stop()
+      System.err.println(f"[server-probe] round $r: $rps%.2f req/s over $reqs requests")
+      rps
+    } finally agg.unpersist(blocking = false)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cpus = args.headOption.map(_.toInt).getOrElse(Measure.Cpus)
+    val n = args.lift(1).map(_.toInt).getOrElse(3)
+    val spark = Measure.session(cpus)
+    try rounds(spark, n) finally spark.stop()
   }
 }

@@ -33,6 +33,11 @@ object SparkEntry {
   def streamingQueries: Map[String, (SparkSession, String) => DataFrame] =
     graft.streaming.StreamingQueries.queries
 
+  /** `queries` minus the streaming family — what the boards time as
+    * batch work. */
+  def batchQueries: Map[String, (SparkSession, String) => DataFrame] =
+    queries -- streamingQueries.keySet
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

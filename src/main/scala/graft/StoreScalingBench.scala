@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Empirical scale evidence for the STREAMING side (the r12 verdict's
   * #4 ask): SCALING_r12 measures every batch query at two SFs, but the
@@ -69,17 +71,6 @@ object StoreScalingBench {
                                readSec: Double, err: Option[String]) {
     def totalSec: Double = ingestSec + readSec
   }
-
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split("\\s+")(0)
-    catch { case _: Throwable => "-1" }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 
   /** `repl` disjoint copies of the events table: user_id (and
     * event_id) offset per replica so the per-user stores fold a
@@ -190,8 +181,7 @@ object StoreScalingBench {
       val t2 = System.nanoTime()
       StoreTiming(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, None)
     } catch { case e: Throwable =>
-      StoreTiming(name, -1.0, -1.0, Some(
-        s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}"))
+      StoreTiming(name, -1.0, -1.0, Some(Measure.describe(e)))
     } finally Seq(landing, store, ckpt).foreach(SQ.rmTree)
   }
 
@@ -206,8 +196,7 @@ object StoreScalingBench {
     * artifact for context. */
   def render(sfDir: String, dataRatio: Double, base: Seq[StoreTiming],
              small: Seq[StoreTiming], big: Seq[StoreTiming],
-             loadPre: String, loadPost: String,
-             contended: Boolean): (String, Int) = {
+             host: JObject): JObject = {
     val bigM = big.map(t => t.name -> t).toMap
     val baseM = base.map(t => t.name -> t).toMap
     val ok = small.filter(s => s.err.isEmpty &&
@@ -220,67 +209,37 @@ object StoreScalingBench {
       val margS = math.max(s.totalSec - z.totalSec, 0.0)
       val margB = math.max(b.totalSec - z.totalSec, 0.0)
       val margRatio = margB / math.max(margS, MargFloorSec)
-      s"${jsonStr(s.name)}:{" +
-        s""""t_base":${z.totalSec},""" +
-        s""""t_small":${s.totalSec},"t_big":${b.totalSec},"ratio":$ratio,""" +
-        s""""marg_small":$margS,"marg_big":$margB,"marg_ratio":$margRatio,""" +
-        s""""ingest_small":${s.ingestSec},"ingest_big":${b.ingestSec},""" +
-        s""""read_small":${s.readSec},"read_big":${b.readSec}}"""
-    }.mkString("{", ",", "}")
-    val all = base ++ small ++ big
-    val errs = all.filter(_.err.isDefined)
-      .map(t => s"${jsonStr(t.name)}:${jsonStr(t.err.get)}")
-      .mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"store_scaling","sf":${jsonStr(sfDir)},""" +
-        s""""data_ratio":$dataRatio,"drops":$Drops,"stores":$entries,""" +
-        s""""errors":$errs,"n_failed":${all.count(_.err.isDefined)},""" +
-        s""""loadavg_pre":$loadPre,"loadavg_post":$loadPost,""" +
-        s""""contended":$contended}"""
-    (json, if (all.exists(_.err.isDefined)) 1 else 0)
+      JField(s.name, ("t_base" -> z.totalSec) ~
+        ("t_small" -> s.totalSec) ~ ("t_big" -> b.totalSec) ~ ("ratio" -> ratio) ~
+        ("marg_small" -> margS) ~ ("marg_big" -> margB) ~ ("marg_ratio" -> margRatio) ~
+        ("ingest_small" -> s.ingestSec) ~ ("ingest_big" -> b.ingestSec) ~
+        ("read_small" -> s.readSec) ~ ("read_big" -> b.readSec))
+    }
+    ("metric" -> "store_scaling") ~ ("sf" -> sfDir) ~ ("data_ratio" -> dataRatio) ~
+      ("drops" -> Drops) ~ ("stores" -> JObject(entries.toList)) ~
+      Measure.failures((base ++ small ++ big).collect {
+        case StoreTiming(n, _, _, Some(e)) => n -> e }) ~
+      host
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen/state-machinery warm-up — a throwaway 1× run of
-    // EVERY store kind: each kind compiles its own ingest/fold/read
-    // plans on first use, and warming only "daily" (the first cut)
-    // left the other three kinds' cold-start inside their ZERO-ROW
-    // baseline leg (which runs first), inflating t_base past t_small
-    // and clamping the marginal pairs to a vacuous 0/0 — observed on
-    // the first r14 run (usermetrics t_base 14.2 s vs t_small 4.6 s).
-    StoreNames.foreach { n =>
-      try { timeStore(spark, sfDir, n, 1); () }
-      catch { case _: Throwable => }
-    }
-    val deadline = System.currentTimeMillis() + 300000L
-    while (System.currentTimeMillis() < deadline &&
-           loadavg().toDoubleOption.exists(_ > Bench.MaxLoadDefault)) {
-      System.err.println(s"[store-scaling] settling: loadavg ${loadavg()}")
-      Thread.sleep(10000)
-    }
-    val loadPre = loadavg()
-    val maxLoad = sys.env.get("SPARK_GRAFT_MAX_LOAD")
-      .flatMap(_.toDoubleOption).getOrElse(Bench.MaxLoadDefault)
-    val contended = loadPre.toDoubleOption.exists(_ > maxLoad)
-    val base = StoreNames.map(n => timeStore(spark, sfDir, n, 0))
-    val small = StoreNames.map(n => timeStore(spark, sfDir, n, 1))
-    val big = StoreNames.map(n => timeStore(spark, sfDir, n, Repl))
-    val (json, exitCode) = render(sfDir, Repl.toDouble, base, small, big,
-      loadPre, loadavg(), contended)
-    println(); println(json); Console.out.flush()
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("store_scaling_out.json"), json)
-    catch { case _: Throwable => }
-    spark.stop()
-    if (exitCode != 0) sys.exit(exitCode)
+    val spark = Measure.session()
+    sys.exit(Measure.emit(spark, Some("store_scaling_out.json")) {
+      // JVM/codegen/state-machinery warm-up — a throwaway 1× run of
+      // EVERY store kind: each kind compiles its own ingest/fold/read
+      // plans on first use, and warming only "daily" (the first cut)
+      // left the other three kinds' cold-start inside their ZERO-ROW
+      // baseline leg (which runs first), inflating t_base past t_small
+      // and clamping the marginal pairs to a vacuous 0/0 — observed on
+      // the first r14 run (usermetrics t_base 14.2 s vs t_small 4.6 s).
+      StoreNames.foreach(n => timeStore(spark, sfDir, n, 1))
+      Measure.settle(300000L)
+      val regime = Measure.regime()
+      val base = StoreNames.map(n => timeStore(spark, sfDir, n, 0))
+      val small = StoreNames.map(n => timeStore(spark, sfDir, n, 1))
+      val big = StoreNames.map(n => timeStore(spark, sfDir, n, Repl))
+      render(sfDir, Repl.toDouble, base, small, big, regime.close())
+    })
   }
 }

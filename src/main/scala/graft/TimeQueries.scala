@@ -1,41 +1,31 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-bench for the optimization loop: time the named registered
   * queries with EXACTLY Bench.timeQuery's methodology (same session
   * posture, same reap, median of 3) without paying for the full board —
   * the measure/fix/re-measure inner loop of guide §1.
   *
   * Usage: TimeQueries <name> [name...]  (env: SPARK_GRAFT_SF_DIR,
-  * SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS).
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_RUNS, SPARK_GRAFT_BARE). Prints one
+  * `<name> <seconds> s [error]` line per query.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_BARE=1 skips the session posture (extensions + rule
     // confs) — the A/B lever for isolating posture cost from query cost
-    val spark = (if (sys.env.get("SPARK_GRAFT_BARE").contains("1")) b0
-                 else GraftSession.tune(b0)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try { spark.range(1000).selectExpr("sum(id)").collect()
-      SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count(); () }
-    catch { case _: Throwable => }
-    args.foreach { n =>
-      SparkEntry.queries.get(n) match {
-        case None => println(s"$n NO-SUCH-QUERY")
-        case Some(fn) =>
-          val r = Bench.timeQuery(spark, sfDir, n, fn, runs)
-          println(f"$n ${r.sec}%.3f s ${r.err.getOrElse("")}")
+    val spark = Measure.session(tuned = !sys.env.get("SPARK_GRAFT_BARE").contains("1"))
+    try {
+      Measure.warm(spark, sfDir)
+      args.foreach { n =>
+        SparkEntry.queries.get(n) match {
+          case None => println(s"$n NO-SUCH-QUERY")
+          case Some(fn) =>
+            val r = Bench.timeQuery(spark, sfDir, n, fn, runs)
+            println(f"$n ${r.sec}%.3f s ${r.err.getOrElse("")}")
+        }
       }
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

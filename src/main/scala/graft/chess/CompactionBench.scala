@@ -2,9 +2,13 @@ package graft.chess
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.JsonDSL._
+
+import graft.Measure
 
 /** Read-amplification measurement behind the compaction trigger policy
-  * (`StreamingImport.CompactEpochsConf`): the SAME corpus is written as
+  * (`StreamingImport.maybeCompact`): the SAME corpus is written as
   * a 1-, 4- and 16-epoch store, a fixed batch-probe workload is timed
   * against each (median of 3), then the 16-epoch store is compacted and
   * re-timed. Every probe over an epoched store unions every epoch's
@@ -28,12 +32,6 @@ object CompactionBench {
   private def tmp(p: String): String = graft.TempDirs.register(
     java.nio.file.Files.createTempDirectory(p).toString)
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
-  private def loadavg(): String =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split("\\s+")(0)
-    catch { case _: Throwable => "-1" }
-
   /** Time the batch-probe workload (probe keys broadcast into the
     * store read, J1 shape) against one store layout. */
   private def probeSec(spark: SparkSession, dir: String,
@@ -53,14 +51,13 @@ object CompactionBench {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(20000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val loadPre = loadavg()
+    val spark = Measure.session()
+    // layouts are TempDirs-registered; the exit reaper deletes them
+    sys.exit(Measure.emit(spark, Some("COMPACTION_BENCH.json"))(measure(spark, n)))
+  }
+
+  private def measure(spark: SparkSession, n: Int): JObject = {
+    val regime = Measure.regime()
 
     val occ = ChessIngest.positionStream(spark,
       RandomGames.generate(spark, n)).toDF().cache()
@@ -86,7 +83,7 @@ object CompactionBench {
     probes.count()
 
     def m3(dir: String): Double =
-      median((1 to 3).map(_ => probeSec(spark, dir, probes)))
+      Measure.median((1 to 3).map(_ => probeSec(spark, dir, probes)))
 
     val perLayout = layouts.toSeq.sortBy(_._1).map { case (e, dir) =>
       e -> (m3(dir), parquetFiles(dir), spark.read.parquet(dir).count()) }
@@ -104,7 +101,7 @@ object CompactionBench {
     // 1, 4 and 16 batch_id partitions (what 1/4/16 micro-batches
     // produce with compaction off), probed with a fixed new-batch band
     // set; then the 16-partition store is folded (BatchStore.compact)
-    // and re-probed — quantifying what the conf'd trigger buys.
+    // and re-probed — quantifying what the fold trigger buys.
     import graft.operators.MinHashLSH
     import graft.streaming.BatchStore
     val nDocs = n // scale the doc corpus with the games arg
@@ -138,7 +135,7 @@ object CompactionBench {
       (System.nanoTime() - t) / 1e9
     }
     def sm3(dir: String): Double =
-      median((1 to 3).map(_ => streamProbeSec(dir)))
+      Measure.median((1 to 3).map(_ => streamProbeSec(dir)))
     val streamPerLayout = streamLayouts.toSeq.sortBy(_._1)
       .map { case (e, dir) => e -> (sm3(dir), parquetFiles(dir)) }
     val st0 = System.nanoTime()
@@ -146,37 +143,26 @@ object CompactionBench {
     val streamCompactSec = (System.nanoTime() - st0) / 1e9
     val streamCompactedProbe = sm3(streamLayouts(16))
     val streamCompactedFiles = parquetFiles(streamLayouts(16))
-    val streamProbesJson = streamPerLayout
-      .map { case (e, (s, _)) => s""""batches_$e":$s""" }.mkString(",")
-    val streamFilesJson = streamPerLayout
-      .map { case (e, (_, f)) => s""""batches_$e":$f""" }.mkString(",")
-
-    val probesJson = perLayout
-      .map { case (e, (s, _, _)) => s""""epochs_$e":$s""" }.mkString(",")
-    val filesJson = perLayout
-      .map { case (e, (_, f, _)) => s""""epochs_$e":$f""" }.mkString(",")
+    def byLayout[T](prefix: String, rows: Seq[(Int, T)], compacted: JValue)(
+        v: T => JValue): JObject =
+      JObject(rows.map { case (e, r) => JField(s"$prefix$e", v(r)) }.toList :+
+        JField("compacted", compacted))
     // stored rows per layout: equal keys stay UNMERGED across epochs
     // (the start position is a row in every epoch), so row count is the
     // layout's true amplification driver — what every probe re-merges
-    val rowsJson = perLayout
-      .map { case (e, (_, _, r)) => s""""epochs_$e":$r""" }.mkString(",")
-    val json =
-      s"""{"metric":"compaction_bench","games":$n,""" +
-        s""""probe_s":{$probesJson,"compacted":$compactedProbe},""" +
-        s""""files":{$filesJson,"compacted":$compactedFiles},""" +
-        s""""rows":{$rowsJson,"compacted":${spark.read.parquet(compacted).count()}},""" +
-        s""""compact_s":$compactSec,""" +
-        s""""policy_epochs":${StreamingImport.DefaultCompactEpochs},""" +
-        s""""stream_probe_s":{$streamProbesJson,"compacted":$streamCompactedProbe},""" +
-        s""""stream_files":{$streamFilesJson,"compacted":$streamCompactedFiles},""" +
-        s""""stream_compact_s":$streamCompactSec,""" +
-        s""""policy_batches":${graft.streaming.BatchStore.DefaultCompactBatches},""" +
-        s""""loadavg_pre":$loadPre}"""
-    println(); println(json); Console.out.flush()
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("COMPACTION_BENCH.json"), json)
-    catch { case _: Throwable => }
-    // layouts are TempDirs-registered; the exit reaper deletes them
-    spark.stop()
+    ("metric" -> "compaction_bench") ~ ("games" -> n) ~
+      ("probe_s" -> byLayout("epochs_", perLayout, JDouble(compactedProbe))(r => JDouble(r._1))) ~
+      ("files" -> byLayout("epochs_", perLayout, JInt(compactedFiles))(r => JInt(r._2))) ~
+      ("rows" -> byLayout("epochs_", perLayout,
+        JLong(spark.read.parquet(compacted).count()))(r => JLong(r._3))) ~
+      ("compact_s" -> compactSec) ~
+      ("policy_epochs" -> StreamingImport.DefaultCompactEpochs) ~
+      ("stream_probe_s" -> byLayout("batches_", streamPerLayout,
+        JDouble(streamCompactedProbe))(r => JDouble(r._1))) ~
+      ("stream_files" -> byLayout("batches_", streamPerLayout,
+        JInt(streamCompactedFiles))(r => JInt(r._2))) ~
+      ("stream_compact_s" -> streamCompactSec) ~
+      ("policy_batches" -> graft.streaming.BatchStore.DefaultCompactBatches) ~
+      regime.close()
   }
 }

@@ -80,8 +80,8 @@ object StreamingImport {
   def epochCount(destDir: String): Int =
     graft.Fs.childNames(destDir).count(_.startsWith("epoch="))
 
-  /** Compaction trigger policy (conf'd like a broadcast threshold):
-    * compact once the store accumulates this many epochs. Measured
+  /** Compaction trigger policy: compact once the store accumulates
+    * this many epochs (the default `compactEvery`). Measured
     * (COMPACTION_BENCH.json, 100k games, 5.6M entries): probe LATENCY
     * is flat in epoch count on one node — the per-epoch partials
     * re-merge in the same parallel agg — and row inflation is small
@@ -93,16 +93,14 @@ object StreamingImport {
     * the file count a small constant over unbounded appends while
     * paying the one-pass rewrite (readStore + write, ~2x one probe
     * here) an 8th as often as every-epoch compaction would. */
-  val CompactEpochsConf = "spark.graft.store.compactEpochs"
   val DefaultCompactEpochs = 8
 
   /** Apply the trigger policy: compact `destDir` into `compactedDir`
-    * iff the epoch count has reached the conf'd threshold. Returns
-    * whether compaction ran. */
-  def maybeCompact(spark: SparkSession, destDir: String,
-                   compactedDir: String): Boolean = {
-    val thr = spark.conf.get(CompactEpochsConf, DefaultCompactEpochs.toString).toInt
-    val due = epochCount(destDir) >= thr
+    * iff the epoch count has reached `compactEvery`. Returns whether
+    * compaction ran. */
+  def maybeCompact(spark: SparkSession, destDir: String, compactedDir: String,
+                   compactEvery: Int = DefaultCompactEpochs): Boolean = {
+    val due = epochCount(destDir) >= compactEvery
     if (due) compact(spark, destDir, compactedDir)
     due
   }

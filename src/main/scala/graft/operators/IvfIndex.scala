@@ -384,15 +384,14 @@ object IvfIndex {
       .map(c => graft.Fs.childNames(s"$dir/index/$c").count(_.startsWith("epoch=")))
       .maxOption.getOrElse(0)
 
-  /** Trigger policy, conf'd like the chess store's: compact once any
-    * cell accumulates this many epoch leaves. Returns whether the
+  /** Trigger policy, the chess store's: compact once any cell
+    * accumulates `compactEvery` epoch leaves. Returns whether the
     * compaction ran. */
-  val CompactEpochsConf = "spark.graft.ivf.compactEpochs"
   val DefaultCompactEpochs = 8
   def maybeCompactEpochs(s: org.apache.spark.sql.SparkSession, dir: String,
-                         compactedDir: String): Boolean = {
-    val thr = s.conf.get(CompactEpochsConf, DefaultCompactEpochs.toString).toInt
-    val due = epochCount(dir) >= thr
+                         compactedDir: String,
+                         compactEvery: Int = DefaultCompactEpochs): Boolean = {
+    val due = epochCount(dir) >= compactEvery
     if (due) compactEpochs(s, dir, compactedDir)
     due
   }

@@ -58,7 +58,7 @@ object BatchStore {
 
   /** Default fold cadence (the `compactEvery` of [[append]]): compact
     * once a store accumulates this many live leaf partitions — the
-    * chess store's default (`StreamingImport.CompactEpochsConf`), for
+    * chess store's default (`StreamingImport.DefaultCompactEpochs`), for
     * the same reason: probe latency is flat in partition count on one
     * node, but file count (paid in listing RPCs and tasks by EVERY
     * batch's re-read) grows without bound; folding every ~8 batches

@@ -1,5 +1,7 @@
 package graft
 
+import org.json4s._
+import org.json4s.JsonDSL._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit red-tests for the pure bench plumbing added in round 13 — the
@@ -10,6 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * artifact shapes (clean JSON and the driver's log-tail wrapper with
   * backslash-escaped quotes). */
 class BenchHelpersSpec extends AnyFunSuite {
+
+  private val host: JObject =
+    ("loadavg_pre" -> 0.5) ~ ("loadavg_post" -> 0.6) ~ ("contended" -> false)
+
+  /** The artifact line and exit code [[Measure.emit]] would produce. */
+  private def rendered(artifact: JValue): (String, Int) =
+    (Measure.render(artifact), Measure.exitCode(artifact))
 
   test("sfOf derives the scale factor from the dir name, loudly or not at all") {
     assert(ScalingBench.sfOf("/root/testdata/sf0.01") == 0.01)
@@ -24,15 +33,14 @@ class BenchHelpersSpec extends AnyFunSuite {
   }
 
   test("derived data_ratio lands in the scaling artifact verbatim") {
-    val (json, rc) = ScalingBench.render("/t/sf0.02", "/t/sf0.5",
+    val (json, rc) = rendered(ScalingBench.render("/t/sf0.02", "/t/sf0.5",
       Seq(Bench.QResult("q1", 1.0, None)),
       Seq(Bench.QResult("q1", 5.0, None)),
-      Map.empty, "0.5", "0.6", contended = false)
+      Map.empty, host))
     assert(rc == 0)
     assert(json.contains("\"data_ratio\":25.0"), json)
     intercept[IllegalArgumentException] { // inverted pair must refuse
-      ScalingBench.render("/t/sf0.5", "/t/sf0.02", Nil, Nil,
-        Map.empty, "0", "0", contended = false)
+      ScalingBench.render("/t/sf0.5", "/t/sf0.02", Nil, Nil, Map.empty, host)
     }
   }
 
@@ -42,10 +50,10 @@ class BenchHelpersSpec extends AnyFunSuite {
     val ok = StoreTiming("vocab", 2.0, 0.5, None)
     val okBig = StoreTiming("vocab", 4.0, 1.0, None)
     val bad = StoreTiming("daily", -1.0, -1.0, Some("boom"))
-    val (json, rc) = StoreScalingBench.render("/t/sf0.1", 8.0,
+    val (json, rc) = rendered(StoreScalingBench.render("/t/sf0.1", 8.0,
       Seq(zero, StoreTiming("daily", 0.5, 0.1, None)),
       Seq(ok, bad), Seq(okBig, StoreTiming("daily", 1.0, 0.1, None)),
-      "0.5", "0.6", contended = false)
+      host))
     assert(rc == 1, "an errored store must poison the exit code")
     assert(json.contains("\"n_failed\":1"), json)
     assert(json.contains("\"vocab\"") && json.contains("\"ratio\":2.0"), json)
@@ -56,12 +64,12 @@ class BenchHelpersSpec extends AnyFunSuite {
     // the errored store contributes NO timing entry (a broken store
     // must never make the artifact look healthy)
     assert(!json.contains("\"daily\":{"), json)
-    val clean = StoreScalingBench.render("/t/sf0.1", 8.0,
-      Seq(zero), Seq(ok), Seq(okBig), "0.5", "0.6", contended = false)
+    val clean = rendered(StoreScalingBench.render("/t/sf0.1", 8.0,
+      Seq(zero), Seq(ok), Seq(okBig), host))
     assert(clean._2 == 0)
     // a store missing its baseline run is dropped, not mis-ratioed
-    val noBase = StoreScalingBench.render("/t/sf0.1", 8.0,
-      Nil, Seq(ok), Seq(okBig), "0.5", "0.6", contended = false)
+    val noBase = rendered(StoreScalingBench.render("/t/sf0.1", 8.0,
+      Nil, Seq(ok), Seq(okBig), host))
     assert(!noBase._1.contains("\"vocab\":{"), noBase._1)
   }
 
@@ -114,6 +122,16 @@ class BenchHelpersSpec extends AnyFunSuite {
       """"errors":{},"n_failed":0,"sf":"sf0.01"}"""
     val c = Bench.compactLine(full)
     assert(c.contains("\"stage_build_total\":8.4E-4"), c)
+  }
+
+  test("compact bench line: a quote or brace inside an error message names no extra failure") {
+    // escaped quotes and a closing brace inside a message are message
+    // text, not the end of the errors map or a second failed name
+    val full = """{"metric":"total","value":1.5,"stage_build":{},""" +
+      """"errors":{"q99_broken":"SparkException: saw \"x\": y}"},""" +
+      """"n_failed":1,"sf":"sf0.01"}"""
+    val c = Bench.compactLine(full)
+    assert(c.contains("\"failed\":[\"q99_broken\"]"), c)
   }
 
   test("driver-regime parser reads both the clean and the log-tail wrapper shapes") {

@@ -7,6 +7,10 @@ import org.apache.spark.sql.functions._
   * faster) and must poison the exit code; healthy queries still report. */
 class BenchSpec extends SparkTestBase {
 
+  /** The artifact line and exit code [[Measure.emit]] would produce. */
+  private def rendered(artifact: org.json4s.JValue): (String, Int) =
+    (Measure.render(artifact), Measure.exitCode(artifact))
+
   test("a deliberately-broken query fails the run and is excluded from totals") {
     val good = Map("q_ok" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
       s.range(10).select(col("id"))))
@@ -14,7 +18,7 @@ class BenchSpec extends SparkTestBase {
     // projection-only failure (count drops unreferenced columns)
     val bad = Map("q_boom" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
       s.read.parquet(s"$d/no_such_table.parquet")))
-    val (json, exit) = Bench.run(spark, sf, good ++ bad, Map.empty, runs = 1)
+    val (json, exit) = rendered(Bench.run(spark, sf, good ++ bad, Map.empty, runs = 1))
     assert(exit === 1)
     assert(json.contains("\"q_ok\":"))
     assert(!json.contains("\"q_boom\":0"), json) // no fake timing
@@ -26,7 +30,7 @@ class BenchSpec extends SparkTestBase {
     val qs = Map(
       "q_a" -> ((s: org.apache.spark.sql.SparkSession, d: String) => s.range(5).toDF()),
       "q_b" -> ((s: org.apache.spark.sql.SparkSession, d: String) => s.range(7).toDF()))
-    val (json, exit) = Bench.run(spark, sf, qs, Map.empty, runs = 1)
+    val (json, exit) = rendered(Bench.run(spark, sf, qs, Map.empty, runs = 1))
     assert(exit === 0)
     assert(json.contains("\"q_a\":") && json.contains("\"q_b\":"))
     assert(json.contains("\"loadavg_pre\":"), json)
@@ -42,10 +46,10 @@ class BenchSpec extends SparkTestBase {
     val qs = Map(
       "q_a" -> ((s: org.apache.spark.sql.SparkSession, d: String) => s.range(5).toDF()))
     var warmedBeforeTiming = false
-    val (json, exit) = Bench.run(spark, sf, qs, Map.empty, runs = 1,
+    val (json, exit) = rendered(Bench.run(spark, sf, qs, Map.empty, runs = 1,
       stageWarm = Some((_, _) => { warmedBeforeTiming = true
         Map("fake_stage" -> 1.25) }),
-      serverBench = Some(() => 99.5))
+      serverBench = Some(() => 99.5)))
     assert(exit === 0)
     assert(warmedBeforeTiming)
     assert(json.contains("\"stage_build\":{\"fake_stage\":1.25}"), json)

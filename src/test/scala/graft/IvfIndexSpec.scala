@@ -102,23 +102,20 @@ class IvfIndexSpec extends SparkTestBase {
       s"cell must stay inside a partition filter with the epoch level present:\n$p")
 
     // epoch compaction (the unbounded cost of appends is FILE count,
-    // not probe latency): the trigger fires at the conf'd threshold,
+    // not probe latency): the trigger fires at its threshold,
     // the rewrite collapses every cell to one epoch leaf, and probes
     // answer identically off the compacted layout (epochCount guards
     // the precondition so the trigger check isn't vacuous)
     val comp = Files.createTempDirectory("graft-ivf-comp").toString
-    spark.conf.set(IvfIndex.CompactEpochsConf, "3")
-    try {
-      assert(IvfIndex.epochCount(inc) === 3)
-      assert(IvfIndex.maybeCompactEpochs(spark, inc, comp),
-        "3 epoch leaves must trip the threshold-3 trigger")
-      assert(IvfIndex.epochCount(comp) === 1,
-        "compaction must leave exactly one epoch leaf per cell")
-      val gotC = IvfIndex.topKIndexed(probes, comp, nprobe, k)
-        .select(cols.head, cols.tail: _*)
-      assert(gotC.exceptAll(want).isEmpty && want.exceptAll(gotC).isEmpty,
-        "the compacted layout must answer identically")
-    } finally spark.conf.unset(IvfIndex.CompactEpochsConf)
+    assert(IvfIndex.epochCount(inc) === 3)
+    assert(IvfIndex.maybeCompactEpochs(spark, inc, comp, compactEvery = 3),
+      "3 epoch leaves must trip the threshold-3 trigger")
+    assert(IvfIndex.epochCount(comp) === 1,
+      "compaction must leave exactly one epoch leaf per cell")
+    val gotC = IvfIndex.topKIndexed(probes, comp, nprobe, k)
+      .select(cols.head, cols.tail: _*)
+    assert(gotC.exceptAll(want).isEmpty && want.exceptAll(gotC).isEmpty,
+      "the compacted layout must answer identically")
   }
 
   test("streamed index build killed mid-run resumes to the uninterrupted layout") {

@@ -73,20 +73,16 @@ class StreamingImportSpec extends SparkTestBase {
     assert(afterReplay == beforeReplay,
       "an epoch replay must rewrite its partition, not double it")
 
-    // conf'd trigger policy: fires at the threshold, not below it
+    // trigger policy: fires at the threshold, not below it
     val epochs = StreamingImport.epochCount(dest)
     assert(epochs >= 2, "the two-drop + catch-up ingest must leave multiple epochs")
     val c2 = tmp("pos-compacted2")
-    spark.conf.set(StreamingImport.CompactEpochsConf, (epochs + 1).toString)
-    try {
-      assert(!StreamingImport.maybeCompact(spark, dest, c2),
-        "below the conf'd threshold the policy must not compact")
-      spark.conf.set(StreamingImport.CompactEpochsConf, epochs.toString)
-      assert(StreamingImport.maybeCompact(spark, dest, c2),
-        "at the conf'd threshold the policy must compact")
-      assert(StreamingImport.epochCount(c2) == 1)
-      assert(norm(StreamingImport.readStore(spark, c2))
-        .exceptAll(norm(StreamingImport.readStore(spark, dest))).isEmpty)
-    } finally spark.conf.unset(StreamingImport.CompactEpochsConf)
+    assert(!StreamingImport.maybeCompact(spark, dest, c2, compactEvery = epochs + 1),
+      "below the threshold the policy must not compact")
+    assert(StreamingImport.maybeCompact(spark, dest, c2, compactEvery = epochs),
+      "at the threshold the policy must compact")
+    assert(StreamingImport.epochCount(c2) == 1)
+    assert(norm(StreamingImport.readStore(spark, c2))
+      .exceptAll(norm(StreamingImport.readStore(spark, dest))).isEmpty)
   }
 }

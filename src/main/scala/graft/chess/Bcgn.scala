@@ -1,6 +1,5 @@
 package graft.chess
 
-import org.apache.spark.sql.{Dataset, SparkSession}
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 /** Binary game format (SURVEY.md §2.1 S3 role — the reference's .bcgn
@@ -17,11 +16,11 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
   * every decoded game is legality-verified for free, exactly like the
   * PGN ingest path.
   *
-  * Spark surface mirrors PgnSource: `write` streams each partition to
-  * its own .bcgn file (no driver bottleneck, no shuffle); `read` loads
-  * via the binaryFile source and decodes per file on executors — a
-  * 100 TB corpus is thousands of files, so parallelism is per-file,
-  * matching how .bcgn corpora are exchanged in practice.
+  * This object is the codec only. Spark reads and writes .bcgn through
+  * the DataSource V2 connector (graft.sources.BcgnDataSource,
+  * `format("bcgn")`): one file per partition on write, one input
+  * partition per file on read; `decodeFile` over a file's raw bytes is
+  * the reference the connector is checked against.
   */
 object Bcgn {
 
@@ -128,31 +127,4 @@ object Bcgn {
   /** Decode a whole file, movelists included (replay-verified). */
   def decodeFile(bytes: Array[Byte]): Iterator[ChessIngest.GameRow] =
     decodeRecords(bytes, decodeGame _)
-
-  /** One .bcgn file per partition, written executor-side. */
-  def write(games: Dataset[ChessIngest.GameRow], dir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    games.foreachPartition { (it: Iterator[ChessIngest.GameRow]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val bytes = encodeFile(it)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, f"part-$pid%05d.bcgn"), bytes)
-        ()
-      }
-    }
-  }
-
-  /** Read a .bcgn directory (all *.bcgn inside) or a single .bcgn file
-    * back as games; decoding (and so legality verification) runs per
-    * file on executors. A file path loads exactly that file — never its
-    * siblings. */
-  def read(spark: SparkSession, path: String): Dataset[ChessIngest.GameRow] = {
-    import spark.implicits._
-    val src =
-      if (new java.io.File(path).isDirectory) s"$path/*.bcgn" else path
-    spark.read.format("binaryFile").load(src)
-      .select("content").as[Array[Byte]]
-      .flatMap(decodeFile _)
-  }
 }

@@ -101,6 +101,22 @@ object ChessIngest {
     if (approxGames >= SkewGamesThreshold) SaltedAgg.salted(occ.toDF())
     else SaltedAgg.direct(occ.toDF())
 
+  /** The entry key: position signature, the move that led there, and
+    * the game class. */
+  val EntryKeys: Seq[String] = Seq("posHi", "posLo", "reverseMove", "level", "result")
+
+  /** The one entry-merge rule: entries equal on `keys` combine as
+    * Σ games, Σ eloDiffSum, min firstGameId, max lastGameId — the
+    * reference's k-way run-merge combine. Every measure is
+    * reassociative, so the rule serves each level that merges partial
+    * entries: salted sub-aggregates, store epochs and probe rollups. */
+  def mergeEntries(entries: DataFrame, keys: Seq[String]): DataFrame =
+    entries.groupBy(keys.map(col): _*)
+      .agg(sum(col("games")).as("games"),
+           sum(col("eloDiffSum")).as("eloDiffSum"),
+           min(col("firstGameId")).as("firstGameId"),
+           max(col("lastGameId")).as("lastGameId"))
+
   /** Write the agg table the way the 100 TB layout wants it: bucketed by
     * posHi so probe joins prune to 1/N of the data, sorted within
     * buckets so row-group min/max stats do the binary-search work

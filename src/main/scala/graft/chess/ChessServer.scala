@@ -7,9 +7,9 @@ import org.json4s.jackson.JsonMethods
 /** JSON query protocol (SURVEY.md §2.1 S8, §3.2; role of the reference's
   * TCP server + `Query.h` Request/Response used by the companion GUI).
   *
-  * v1 transport is CLI/file line-in line-out (the TCP loop is a thin
-  * wrapper to add later — the protocol codec and execution path are the
-  * substance). Request:
+  * Transports: line-delimited JSON over TCP ([[serveTcp]]) or from a
+  * file/stdin, one response line per request line — `App server` and
+  * `App query`. Request:
   * {{{
   * {"token":"t1","query":{
   *   "positions":[{"fen":"...","move":"e2e4"?}, ...],
@@ -269,6 +269,15 @@ object ChessServer {
     else execute(spark, positionsAgg, parseRequest(j), games)
   }
 
+  /** [[handle]] for a transport: a failed request answers with an
+    * `{"error":…}` line instead of throwing. */
+  def respond(spark: SparkSession, positionsAgg: DataFrame, line: String,
+              games: Option[org.apache.spark.sql.Dataset[ChessIngest.GameRow]]): String =
+    try handle(spark, positionsAgg, line, games) catch {
+      case e: Exception =>
+        s"""{"error":${JsonMethods.compact(JsonMethods.render(JString(e.getMessage)))}}"""
+    }
+
   /** Serve line-delimited JSON over TCP (the reference's GUI transport):
     * one response line per request line, CONCURRENT connections — each
     * client gets its own handler thread, all sharing the one cached
@@ -326,11 +335,7 @@ object ChessServer {
             while (open && line != null) {
               if (line.trim.nonEmpty) {
                 if (reserve()) {
-                  val resp = try handle(spark, positionsAgg, line, games) catch {
-                    case e: Exception =>
-                      s"""{"error":${JsonMethods.compact(JsonMethods.render(JString(e.getMessage)))}}"""
-                  }
-                  out.println(resp)
+                  out.println(respond(spark, positionsAgg, line, games))
                   written.incrementAndGet()
                   // last slot reserved: unblock the acceptor so the
                   // server can terminate instead of sitting in accept()
@@ -406,46 +411,5 @@ object ChessServer {
     require(results.forall(rs => rs.size == perClient && !rs.contains(null)),
       "lost responses — rps would overcount")
     (total / secs, results.toSeq)
-  }
-
-  /** CLI loop: line-delimited JSON requests on stdin (or a file arg),
-    * responses on stdout; `--tcp <port>` serves the reference's socket
-    * transport instead. */
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    // default corpus: embedded sample games; trailing arg may point at a
-    // PGN file
-    val pgnArg = args.drop(if (args.headOption.contains("--tcp")) 2 else 1)
-    val pgn = pgnArg.headOption.map(p =>
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))))
-      .getOrElse(SampleGames.pgn)
-    val games = ChessIngest.parseGames(spark, spark.createDataset(Seq(pgn)),
-      Core.Level.Human)
-    val agg = ChessIngest.positionsAgg(
-      ChessIngest.positionStream(spark, games)).cache()
-    if (args.headOption.contains("--tcp")) {
-      serveTcp(spark, agg, args(1).toInt, games = Some(games))
-      spark.stop()
-      return
-    }
-    val in: Iterator[String] =
-      if (args.nonEmpty && args(0) != "-")
-        scala.io.Source.fromFile(args(0)).getLines()
-      else scala.io.Source.stdin.getLines()
-    in.filter(_.trim.nonEmpty).foreach { line =>
-      val out = try handle(spark, agg, line, Some(games)) catch {
-        case e: Exception =>
-          s"""{"error":${JsonMethods.compact(JsonMethods.render(JString(e.getMessage)))}}"""
-      }
-      println(out)
-    }
-    spark.stop()
   }
 }

@@ -56,18 +56,7 @@ object QueryEngine {
   def explore(spark: SparkSession, positionsAgg: DataFrame,
               probes: Seq[(String, Option[String])]): DataFrame = {
     import spark.implicits._
-    val keys = probeKeys(probes).toDF()
-    positionsAgg
-      .join(broadcast(keys), Seq("posHi", "posLo"))
-      .withColumn("select",
-        when(col("reverseMove") === col("contMove") && col("contMove") =!= NoMove,
-          "continuations").otherwise("transpositions"))
-      .groupBy(col("probeIdx"), col("probeFen"), col("childUci"), col("select"),
-               col("level"), col("result"))
-      .agg(sum(col("games")).as("games"),
-           sum(col("eloDiffSum")).as("eloDiffSum"),
-           min(col("firstGameId")).as("firstGameId"),
-           max(col("lastGameId")).as("lastGameId"))
+    rollup(positionsAgg, broadcast(probeKeys(probes).toDF()), Seq("probeIdx"))
   }
 
   /** Distributed batch probe (SURVEY.md §3.2 "10⁶ probes in one job"):
@@ -85,18 +74,22 @@ object QueryEngine {
     // In the batch path a probe's identity IS its fen (no per-probe
     // 'move' shapes here), so probeIdx is constant-0 and dropped.
     val keys = probeFens.flatMap(fen => probeKeys(Seq(fen -> None)))
-    positionsAgg
-      .join(keys.drop("probeIdx"), Seq("posHi", "posLo"))
-      .withColumn("select",
-        when(col("reverseMove") === col("contMove") && col("contMove") =!= NoMove,
-          "continuations").otherwise("transpositions"))
-      .groupBy(col("probeFen"), col("childUci"), col("select"),
-               col("level"), col("result"))
-      .agg(sum(col("games")).as("games"),
-           sum(col("eloDiffSum")).as("eloDiffSum"),
-           min(col("firstGameId")).as("firstGameId"),
-           max(col("lastGameId")).as("lastGameId"))
+    rollup(positionsAgg, keys.drop("probeIdx"), Nil)
   }
+
+  /** The probe rollup both explore paths share: join the probe keys to
+    * the store, classify each entry as a continuation (reached by the
+    * probed move) or a transposition, and merge the entries per
+    * (`probeId` ++ probe, child, select, level, result). */
+  private def rollup(positionsAgg: DataFrame, keys: DataFrame,
+                     probeId: Seq[String]): DataFrame =
+    ChessIngest.mergeEntries(
+      positionsAgg
+        .join(keys, Seq("posHi", "posLo"))
+        .withColumn("select",
+          when(col("reverseMove") === col("contMove") && col("contMove") =!= NoMove,
+            "continuations").otherwise("transpositions")),
+      probeId ++ Seq("probeFen", "childUci", "select", "level", "result"))
 
   /** J2 header join: resolve first/last gameIds of explore() output to
     * game headers. Two broadcast stages, neither of which shuffles the

@@ -17,27 +17,26 @@ import org.apache.spark.sql.functions._
   */
 object SaltedAgg {
 
-  private val keys = Seq("posHi", "posLo", "reverseMove", "level", "result")
+  import ChessIngest.EntryKeys
 
-  /** Direct (baseline) aggregation of a PosOcc frame. */
-  def direct(occ: DataFrame): DataFrame =
+  /** Occurrences → entries: one occurrence is one game. */
+  private def entriesOf(occ: DataFrame, keys: Seq[String]): DataFrame =
     occ.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("games"), sum("eloDiff").as("eloDiffSum"),
            min("gameId").as("firstGameId"), max("gameId").as("lastGameId"))
 
+  /** Direct (baseline) aggregation of a PosOcc frame. */
+  def direct(occ: DataFrame): DataFrame = entriesOf(occ, EntryKeys)
+
   /** Two-level salted aggregation: level 1 groups by (key, salt) —
     * spreading a hot key over `salts` reducers — level 2 merges the
-    * sub-aggregates (tiny: `salts` rows per distinct key). The salt is
-    * derived from gameId (stable, uniform), not rand(), so the plan
-    * stays deterministic and retry-safe. */
-  def salted(occ: DataFrame, salts: Int = 32): DataFrame = {
-    val l1 = occ
-      .withColumn("__salt", pmod(xxhash64(col("gameId")), lit(salts)))
-      .groupBy((keys :+ "__salt").map(col): _*)
-      .agg(count(lit(1)).as("g"), sum("eloDiff").as("e"),
-           min("gameId").as("f"), max("gameId").as("l"))
-    l1.groupBy(keys.map(col): _*)
-      .agg(sum("g").as("games"), sum("e").as("eloDiffSum"),
-           min("f").as("firstGameId"), max("l").as("lastGameId"))
-  }
+    * sub-aggregates (tiny: `salts` rows per distinct key) with the
+    * entry-merge rule. The salt is derived from gameId (stable,
+    * uniform), not rand(), so the plan stays deterministic and
+    * retry-safe. */
+  def salted(occ: DataFrame, salts: Int = 32): DataFrame =
+    ChessIngest.mergeEntries(
+      entriesOf(occ.withColumn("__salt", pmod(xxhash64(col("gameId")), lit(salts))),
+        EntryKeys :+ "__salt"),
+      EntryKeys)
 }

@@ -1,6 +1,6 @@
 package graft.chess
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -23,51 +23,44 @@ object StreamingImport {
 
   /** Start the incremental import: `landingDir` PGN drops → destDir/epoch=N.
     * Trigger.AvailableNow processes the backlog then stops (the
-    * catch-up "merge" mode); pass continuous=true for a long-lived
-    * watcher. */
+    * catch-up "merge" mode). */
   def start(spark: SparkSession, landingDir: String, destDir: String,
-            checkpointDir: String, level: Byte = Core.Level.Human,
-            continuous: Boolean = false): StreamingQuery = {
+            checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    val raw = spark.readStream
+    spark.readStream
       .option("wholetext", "true")       // one PGN file = one parse unit
       .option("maxFilesPerTrigger", 64)
       .text(landingDir)
-    val writer = raw.as[String].writeStream
+      .as[String].writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], epochId: Long) =>
-        writeEpoch(spark, batch, destDir, epochId, level)
+      .foreachBatch { (batch: Dataset[String], epochId: Long) =>
+        writeEpoch(spark, ChessIngest.parseGames(spark, batch, Core.Level.Human),
+          destDir, epochId)
       }
-    (if (continuous) writer else writer.trigger(Trigger.AvailableNow())).start()
+      .trigger(Trigger.AvailableNow())
+      .start()
   }
 
-  /** One micro-batch's epoch write — IDEMPOTENT under foreachBatch's
-    * at-least-once contract: a batch replayed after a mid-write kill
-    * re-runs with the same epochId, and dynamic partition overwrite
-    * makes it rewrite exactly `epoch=<id>` instead of appending a
-    * second copy of every row into it (the silent double-count a blind
-    * append mode has on restart — the same fix IncrementalDedup's
-    * batch-id partitions apply). Exposed so the spec can replay an
-    * epoch directly and assert the store unchanged. */
-  def writeEpoch(spark: SparkSession, batch: org.apache.spark.sql.Dataset[String],
-                 destDir: String, epochId: Long,
-                 level: Byte = Core.Level.Human): Unit = {
-    val games = ChessIngest.parseGames(spark, batch, level)
+  /** One epoch's write (the stream's micro-batches and `App append`) —
+    * IDEMPOTENT: writing the same epochId again (a micro-batch re-run
+    * after a mid-write kill under foreachBatch's at-least-once
+    * contract) rewrites exactly `epoch=<id>` through dynamic partition
+    * overwrite instead of appending a second copy of every row into it
+    * (the silent double-count a blind append mode has on restart — the
+    * same fix IncrementalDedup's batch-id partitions apply). */
+  def writeEpoch(spark: SparkSession, games: Dataset[ChessIngest.GameRow],
+                 destDir: String, epochId: Long): Unit =
     ChessIngest.positionsAgg(ChessIngest.positionStream(spark, games))
       .withColumn("epoch", lit(epochId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("epoch").parquet(destDir)
-  }
 
   /** Read the current entry store: union of all epochs, re-combined.
     * Equal keys across epochs merge exactly like the reference's k-way
     * run merge (the measures are all reassociative). */
   def readStore(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.parquet(destDir)
-      .groupBy("posHi", "posLo", "reverseMove", "level", "result")
-      .agg(sum("games").as("games"), sum("eloDiffSum").as("eloDiffSum"),
-           min("firstGameId").as("firstGameId"), max("lastGameId").as("lastGameId"))
+    ChessIngest.mergeEntries(spark.read.parquet(destDir), ChessIngest.EntryKeys)
 
   /** Compaction: collapse all epochs into epoch=0 (idempotent job). */
   def compact(spark: SparkSession, destDir: String, compactedDir: String): Unit =

@@ -21,6 +21,12 @@ import org.apache.spark.sql.types._
   * function (and seed) the SQL `xxhash64` expression applies, so the
   * kernel's dims/signs agree bit-for-bit with the ApproxOracle
   * `hashed_tokens` export DuckDB recomputes the query from.
+  *
+  * NULL semantics: the expression is null-safe, so a row whose token
+  * array is NULL (a NULL `text`) is KEPT, with a NULL struct and so
+  * null `fv`/`nnz` — unlike the explode-based relational form, which
+  * drops such a document. In q101 that row scores a null cosine and
+  * sorts last. FeatureHashSpec pins this.
   */
 object FeatureHashKernels {
 

@@ -27,8 +27,8 @@ import graft.chess.{Bcgn, ChessIngest}
   * games.write.format("bcgn").mode(...).save(dir) // one file per partition
   * }}}
   *
-  * Why a connector instead of binaryFile+flatMap (the `Bcgn.read`
-  * fallback): Catalyst column pruning reaches the DECODER. A record is
+  * Why a connector instead of binaryFile+flatMap: Catalyst column
+  * pruning reaches the DECODER. A record is
   * header fields followed by the packed movelist, and restoring move
   * flags requires replaying the game through the legal-move generator —
   * by far the dominant decode cost. When `moves` is not in the required
@@ -44,8 +44,8 @@ import graft.chess.{Bcgn, ChessIngest}
   * can pick broadcast sides without scanning; writes go through the
   * standard commit protocol (temp file per task attempt, rename on
   * commit, delete on abort) so speculative/retried tasks never leave
-  * partial files — semantics `Bcgn.write`'s bare foreachPartition
-  * cannot give.
+  * partial files — semantics a bare foreachPartition writer cannot
+  * give.
   */
 class BcgnDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bcgn"

@@ -54,6 +54,14 @@ class FeatureHashSpec extends SparkTestBase {
     assert(got === want, "kernel vs relational hashing-trick chain")
   }
 
+  test("a NULL-text document is kept with null fv and nnz") {
+    val docs = Seq((1L, Option("a b a")), (2L, Option.empty[String])).toDF("doc_id", "text")
+    val got = newForm(docs).orderBy("doc_id").collect()
+    assert(got.map(_.getLong(0)).toSeq == Seq(1L, 2L), "the NULL-text row must be kept")
+    assert(!got(0).isNullAt(1) && !got(0).isNullAt(2))
+    assert(got(1).isNullAt(1) && got(1).isNullAt(2), "NULL text gives null fv and nnz")
+  }
+
   test("q101 plan has zero exchanges before the top-k cut") {
     val p = SparkEntry.queries("q101_feature_hash")(spark, sf)
       .queryExecution.explainString(

@@ -5,11 +5,14 @@ import graft.SparkTestBase
 class BcgnSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def read(path: String) =
+    spark.read.format("bcgn").load(path).as[ChessIngest.GameRow]
+
   private def roundTrip(games: org.apache.spark.sql.Dataset[ChessIngest.GameRow]): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("bcgn").toString
-    Bcgn.write(games, dir)
+    games.write.format("bcgn").mode("overwrite").save(dir)
     val a = games.collect().sortBy(_.gameId)
-    val b = Bcgn.read(spark, dir).collect().sortBy(_.gameId)
+    val b = read(dir).collect().sortBy(_.gameId)
     assert(a.length == b.length, s"lost games: ${a.length} -> ${b.length}")
     a.zip(b).foreach { case (x, y) =>
       // Array fields compare by reference in case classes — compare
@@ -37,10 +40,10 @@ class BcgnSpec extends SparkTestBase {
         Bcgn.encodeFile(gs.iterator))
     writeOne("a.bcgn", games.take(5))
     writeOne("b.bcgn", games.drop(5)) // sibling corpus that must NOT load
-    val one = Bcgn.read(spark, s"$dir/a.bcgn").collect().map(_.gameId).toSet
+    val one = read(s"$dir/a.bcgn").collect().map(_.gameId).toSet
     assert(one == games.take(5).map(_.gameId).toSet,
       s"file read pulled in siblings: $one")
-    val all = Bcgn.read(spark, dir).count()
+    val all = read(dir).count()
     assert(all == 20, s"dir read should still see both files, got $all")
   }
 

@@ -79,18 +79,6 @@ class ChessSparkSpec extends SparkTestBase {
     assert(agg2.exceptAll(agg).isEmpty && agg.exceptAll(agg2).isEmpty)
   }
 
-  test("A5 typed Aggregator matches the built-in agg path") {
-    val typed = occ.groupByKey(o => (o.posHi, o.posLo, o.reverseMove, o.level, o.result))
-      .agg(WdlStats.aggregator.toColumn.name("s"))
-      .map { case ((hi, lo, rm, lv, rs), s) =>
-        (hi, lo, rm, lv, rs, s.games, s.eloDiffSum, s.firstGameId, s.lastGameId) }
-      .toDF("posHi", "posLo", "reverseMove", "level", "result",
-            "games", "eloDiffSum", "firstGameId", "lastGameId")
-    val builtin = agg.select("posHi", "posLo", "reverseMove", "level", "result",
-      "games", "eloDiffSum", "firstGameId", "lastGameId")
-    assert(typed.exceptAll(builtin).isEmpty && builtin.exceptAll(typed).isEmpty)
-  }
-
   test("eloDiff sums: scholar's mate start entry carries 200 per game") {
     // Scholar's 1200-1000 => +200; Fool 900-1500 => -600; games without
     // both elos contribute 0. Start position entry per (level,result):

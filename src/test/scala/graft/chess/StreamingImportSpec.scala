@@ -65,8 +65,8 @@ class StreamingImportSpec extends SparkTestBase {
     // c.pgn was the latest batch — replay exactly its epoch id
     val replayEpoch = new java.io.File(dest).list()
       .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toLong).max
-    StreamingImport.writeEpoch(spark,
-      spark.createDataset(Seq(chunks.head)), dest, replayEpoch)
+    StreamingImport.writeEpoch(spark, ChessIngest.parseGames(spark,
+      spark.createDataset(Seq(chunks.head)), Core.Level.Human), dest, replayEpoch)
     val afterReplay = StreamingImport.readStore(spark, dest)
       .orderBy("posHi", "posLo", "reverseMove", "level", "result")
       .collect().toSeq

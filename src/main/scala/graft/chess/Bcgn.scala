@@ -11,10 +11,10 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
   * each record is the header fields (DataOutput UTF strings + fixed-
   * width ints) followed by plyCount 16-bit moves packed as
   * from | to<<6 | promoKind<<12 — the same move encoding Core uses,
-  * minus the derivable flag bits. Decoding replays the game with the F5
-  * legal-move generator to restore flags (ep/castle/double/capture), so
-  * every decoded game is legality-verified for free, exactly like the
-  * PGN ingest path.
+  * minus the derivable flag bits. Decoding replays the game, resolving
+  * each recorded move among its from-square's moves to restore flags
+  * (ep/castle/double/capture), so every decoded game is
+  * legality-verified, exactly like the PGN ingest path.
   *
   * This object is the codec only. Spark reads and writes .bcgn through
   * the DataSource V2 connector (graft.sources.BcgnDataSource,
@@ -38,9 +38,10 @@ object Bcgn {
     g.moves.foreach(m => out.writeShort(m & 0xFFFF)) // from|to<<6|promo<<12
   }
 
-  /** Decode one record; flags are restored by matching the packed
-    * (from, to, promo) against the legal moves of the replayed
-    * position — None if any move is illegal (corrupt record). */
+  /** Decode one record; flags are restored by resolving the packed
+    * (from, to, promo) against the pseudo-moves of its from-square in the
+    * replayed position, legality-checked (`Position.resolve`) — None if
+    * the start FEN is malformed or any move is illegal (corrupt record). */
   def decodeGame(in: DataInputStream): Option[ChessIngest.GameRow] = {
     val gameId = in.readLong()
     val event = in.readUTF(); val site = in.readUTF(); val date = in.readUTF()
@@ -50,11 +51,13 @@ object Bcgn {
     val startFen = in.readUTF()
     val nMoves = in.readUnsignedShort()
     val moves = new Array[Int](nMoves)
-    var pos = if (startFen.isEmpty) Position.initial else Position.fromFen(startFen)
+    var pos =
+      if (startFen.isEmpty) Position.initial
+      else try Position.fromFen(startFen) catch { case _: Exception => return None }
     var i = 0
     while (i < nMoves) {
       val packed = in.readUnsignedShort()
-      pos.legalMoves().find(m => (m & 0xFFFF) == packed) match {
+      pos.resolve(packed) match {
         case Some(m) => moves(i) = m; pos = pos.make(m)
         case None => return None
       }

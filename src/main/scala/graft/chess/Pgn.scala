@@ -39,6 +39,8 @@ object Pgn {
   }
 
   private val TagRe = "\\[(\\w+)\\s+\"([^\"]*)\"\\]".r
+  private val MoveNumber = "\\d+\\.+".r
+  private val LeadingMoveNumber = "^\\d+\\.+".r
 
   /** Tokenize one game chunk: tags + SAN tokens (variations dropped).
     * The PGN escape mechanism — '%' in column 0 comments out the whole
@@ -62,9 +64,9 @@ object Pgn {
       val t = tok.result(); tok.clear()
       if (t.nonEmpty && varDepth == 0 &&
           !t.startsWith("$") && t != "1-0" && t != "0-1" && t != "1/2-1/2" &&
-          t != "*" && !t.matches("\\d+\\.+"))
+          t != "*" && !MoveNumber.matches(t))
         // strip leading move numbers glued to the SAN ("1.e4", "3...Nf6")
-        sans += t.replaceFirst("^\\d+\\.+", "")
+        sans += LeadingMoveNumber.replaceFirstIn(t, "")
     }
     while (i < movetextStart.length) {
       val c = movetextStart.charAt(i)

@@ -7,9 +7,11 @@ import Core._
   *
   * Copy-make design: `make` returns a NEW Position (the 64-byte board
   * array is copied). Legality = pseudo-legal generation + own-king-safe
-  * filter; castling checks emptiness and attacked transit squares; en
-  * passant and promotions are fully modeled. Validated by perft against
-  * published node counts (PerftSpec).
+  * filter (`isLegal`); castling checks emptiness and attacked transit
+  * squares; en passant and promotions are fully modeled. A move named by
+  * a record (SAN, UCI, BCGN) is resolved from `pseudoMovesFrom` of its
+  * candidate squares, never from the full legal list. Validated by perft
+  * against published node counts (PerftSpec).
   */
 final class Position(
     val board: Array[Int],     // 64 piece codes
@@ -85,105 +87,107 @@ final class Position(
   /** Pseudo-legal move list (castling pre-checks transit safety, so the
     * only remaining illegality is leaving one's own king in check). */
   def pseudoMoves(): Array[Int] = {
-    val out = new java.util.ArrayList[Integer](64)
-    val us = sideToMove; val them = 1 - us
-    val fwd = if (us == White) 1 else -1
-    val startRank = if (us == White) 1 else 6
-    val promoRank = if (us == White) 7 else 0
+    val out = new MoveList(64)
     var sq = 0
-    while (sq < 64) {
-      val p = board(sq)
-      if (p != Empty && colorOf(p) == us) {
-        val f = file(sq); val r = rank(sq)
-        kindOf(p) match {
-          case 1 => // pawn
-            val r1 = r + fwd
-            if (r1 >= 0 && r1 < 8) {
-              val oneUp = square(f, r1)
-              if (board(oneUp) == Empty) {
-                if (r1 == promoRank) { var pk = 2; while (pk <= 5) { out.add(mkMove(sq, oneUp, pk)); pk += 1 } }
-                else out.add(mkMove(sq, oneUp))
-                if (r == startRank) {
-                  val twoUp = square(f, r + 2 * fwd)
-                  if (board(twoUp) == Empty) out.add(mkMove(sq, twoUp, 0, FlagDouble))
-                }
-              }
-              var df = -1
-              while (df <= 1) {
-                if (df != 0) {
-                  val nf = f + df
-                  if (nf >= 0 && nf < 8) {
-                    val cap = square(nf, r1)
-                    val cp = board(cap)
-                    if (cp != Empty && colorOf(cp) == them) {
-                      if (r1 == promoRank) { var pk = 2; while (pk <= 5) { out.add(mkMove(sq, cap, pk, FlagCapture)); pk += 1 } }
-                      else out.add(mkMove(sq, cap, 0, FlagCapture))
-                    } else if (cap == epSquare) out.add(mkMove(sq, cap, 0, FlagEp | FlagCapture))
-                  }
-                }
-                df += 2
-              }
-            }
-          case 2 => // knight
-            var i = 0
-            while (i < 8) {
-              val nf = f + Position.knightDf(i); val nr = r + Position.knightDr(i)
-              if (nf >= 0 && nf < 8 && nr >= 0 && nr < 8) {
-                val t = square(nf, nr); val tp = board(t)
-                if (tp == Empty) out.add(mkMove(sq, t))
-                else if (colorOf(tp) == them) out.add(mkMove(sq, t, 0, FlagCapture))
-              }
-              i += 1
-            }
-          case 6 => // king
-            var i = 0
-            while (i < 8) {
-              val nf = f + Position.kingDf(i); val nr = r + Position.kingDr(i)
-              if (nf >= 0 && nf < 8 && nr >= 0 && nr < 8) {
-                val t = square(nf, nr); val tp = board(t)
-                if (tp == Empty) out.add(mkMove(sq, t))
-                else if (colorOf(tp) == them) out.add(mkMove(sq, t, 0, FlagCapture))
-              }
-              i += 1
-            }
-            // castling (king on its home square with rights intact)
-            if (us == White && sq == 4) {
-              if ((castling & CastleWK) != 0 && board(5) == Empty && board(6) == Empty &&
-                  board(7) == WR &&
-                  !isAttacked(4, them) && !isAttacked(5, them) && !isAttacked(6, them))
-                out.add(mkMove(4, 6, 0, FlagCastle))
-              if ((castling & CastleWQ) != 0 && board(3) == Empty && board(2) == Empty &&
-                  board(1) == Empty && board(0) == WR &&
-                  !isAttacked(4, them) && !isAttacked(3, them) && !isAttacked(2, them))
-                out.add(mkMove(4, 2, 0, FlagCastle))
-            } else if (us == Black && sq == 60) {
-              if ((castling & CastleBK) != 0 && board(61) == Empty && board(62) == Empty &&
-                  board(63) == BR &&
-                  !isAttacked(60, them) && !isAttacked(61, them) && !isAttacked(62, them))
-                out.add(mkMove(60, 62, 0, FlagCastle))
-              if ((castling & CastleBQ) != 0 && board(59) == Empty && board(58) == Empty &&
-                  board(57) == Empty && board(56) == BR &&
-                  !isAttacked(60, them) && !isAttacked(59, them) && !isAttacked(58, them))
-                out.add(mkMove(60, 58, 0, FlagCastle))
-            }
-          case k => // sliders: bishop 3, rook 4, queen 5
-            var d = 0
-            while (d < 4) {
-              if (k == 4 || k == 5) slide(out, sq, Position.orthoDf(d), Position.orthoDr(d), them)
-              if (k == 3 || k == 5) slide(out, sq, Position.diagDf(d), Position.diagDr(d), them)
-              d += 1
-            }
-        }
-      }
-      sq += 1
-    }
-    val arr = new Array[Int](out.size)
-    var i = 0
-    while (i < arr.length) { arr(i) = out.get(i); i += 1 }
-    arr
+    while (sq < 64) { pseudoMovesFrom(sq, out); sq += 1 }
+    out.toArray
   }
 
-  private def slide(out: java.util.ArrayList[Integer], sq: Int, df: Int, dr: Int, them: Int): Unit = {
+  /** Appends to `out` the pseudo-legal moves of the side to move's piece
+    * on `sq` (nothing if `sq` is empty or holds an enemy piece), in the
+    * order `pseudoMoves()` lists them. */
+  def pseudoMovesFrom(sq: Int, out: MoveList): Unit = {
+    val p = board(sq)
+    val us = sideToMove
+    if (p != Empty && colorOf(p) == us) {
+      val them = 1 - us
+      val fwd = if (us == White) 1 else -1
+      val startRank = if (us == White) 1 else 6
+      val promoRank = if (us == White) 7 else 0
+      val f = file(sq); val r = rank(sq)
+      kindOf(p) match {
+        case 1 => // pawn
+          val r1 = r + fwd
+          if (r1 >= 0 && r1 < 8) {
+            val oneUp = square(f, r1)
+            if (board(oneUp) == Empty) {
+              if (r1 == promoRank) { var pk = 2; while (pk <= 5) { out.add(mkMove(sq, oneUp, pk)); pk += 1 } }
+              else out.add(mkMove(sq, oneUp))
+              if (r == startRank) {
+                val twoUp = square(f, r + 2 * fwd)
+                if (board(twoUp) == Empty) out.add(mkMove(sq, twoUp, 0, FlagDouble))
+              }
+            }
+            var df = -1
+            while (df <= 1) {
+              if (df != 0) {
+                val nf = f + df
+                if (nf >= 0 && nf < 8) {
+                  val cap = square(nf, r1)
+                  val cp = board(cap)
+                  if (cp != Empty && colorOf(cp) == them) {
+                    if (r1 == promoRank) { var pk = 2; while (pk <= 5) { out.add(mkMove(sq, cap, pk, FlagCapture)); pk += 1 } }
+                    else out.add(mkMove(sq, cap, 0, FlagCapture))
+                  } else if (cap == epSquare) out.add(mkMove(sq, cap, 0, FlagEp | FlagCapture))
+                }
+              }
+              df += 2
+            }
+          }
+        case 2 => // knight
+          var i = 0
+          while (i < 8) {
+            val nf = f + Position.knightDf(i); val nr = r + Position.knightDr(i)
+            if (nf >= 0 && nf < 8 && nr >= 0 && nr < 8) {
+              val t = square(nf, nr); val tp = board(t)
+              if (tp == Empty) out.add(mkMove(sq, t))
+              else if (colorOf(tp) == them) out.add(mkMove(sq, t, 0, FlagCapture))
+            }
+            i += 1
+          }
+        case 6 => // king
+          var i = 0
+          while (i < 8) {
+            val nf = f + Position.kingDf(i); val nr = r + Position.kingDr(i)
+            if (nf >= 0 && nf < 8 && nr >= 0 && nr < 8) {
+              val t = square(nf, nr); val tp = board(t)
+              if (tp == Empty) out.add(mkMove(sq, t))
+              else if (colorOf(tp) == them) out.add(mkMove(sq, t, 0, FlagCapture))
+            }
+            i += 1
+          }
+          // castling (king on its home square with rights intact)
+          if (us == White && sq == 4) {
+            if ((castling & CastleWK) != 0 && board(5) == Empty && board(6) == Empty &&
+                board(7) == WR &&
+                !isAttacked(4, them) && !isAttacked(5, them) && !isAttacked(6, them))
+              out.add(mkMove(4, 6, 0, FlagCastle))
+            if ((castling & CastleWQ) != 0 && board(3) == Empty && board(2) == Empty &&
+                board(1) == Empty && board(0) == WR &&
+                !isAttacked(4, them) && !isAttacked(3, them) && !isAttacked(2, them))
+              out.add(mkMove(4, 2, 0, FlagCastle))
+          } else if (us == Black && sq == 60) {
+            if ((castling & CastleBK) != 0 && board(61) == Empty && board(62) == Empty &&
+                board(63) == BR &&
+                !isAttacked(60, them) && !isAttacked(61, them) && !isAttacked(62, them))
+              out.add(mkMove(60, 62, 0, FlagCastle))
+            if ((castling & CastleBQ) != 0 && board(59) == Empty && board(58) == Empty &&
+                board(57) == Empty && board(56) == BR &&
+                !isAttacked(60, them) && !isAttacked(59, them) && !isAttacked(58, them))
+              out.add(mkMove(60, 58, 0, FlagCastle))
+          }
+        case k => // sliders: bishop 3, rook 4, queen 5
+          var d = 0
+          while (d < 4) {
+            if (k == 4 || k == 5) slide(out, sq, Position.orthoDf(d), Position.orthoDr(d), them)
+            if (k == 3 || k == 5) slide(out, sq, Position.diagDf(d), Position.diagDr(d), them)
+            d += 1
+          }
+      }
+    }
+  }
+
+  private def slide(out: MoveList, sq: Int, df: Int, dr: Int, them: Int): Unit = {
     var nf = file(sq) + df; var nr = rank(sq) + dr
     var stop = false
     while (!stop && nf >= 0 && nf < 8 && nr >= 0 && nr < 8) {
@@ -236,13 +240,28 @@ final class Position(
       if (us == Black) fullmove + 1 else fullmove)
   }
 
+  /** Does pseudo-move `m` leave the mover's own king safe? */
+  def isLegal(m: Int): Boolean = {
+    val next = make(m)
+    !next.isAttacked(next.kingSquare(sideToMove), next.sideToMove)
+  }
+
   /** Fully legal moves. */
-  def legalMoves(): Array[Int] = {
-    val us = sideToMove
-    pseudoMoves().filter { m =>
-      val next = make(m)
-      !next.isAttacked(next.kingSquare(us), next.sideToMove)
+  def legalMoves(): Array[Int] = pseudoMoves().filter(isLegal)
+
+  /** The legal move whose low 16 bits (from | to<<6 | promo<<12) equal
+    * `packed`, found among the pseudo-moves of its from-square only —
+    * one record names one move, so the rest of the list is never built. */
+  def resolve(packed: Int): Option[Int] = {
+    val cands = new MoveList(32)
+    pseudoMovesFrom(packed & 63, cands)
+    var i = 0
+    while (i < cands.size) {
+      val m = cands(i)
+      if ((m & 0xFFFF) == packed && isLegal(m)) return Some(m)
+      i += 1
     }
+    None
   }
 
   def perft(depth: Int): Long =
@@ -297,6 +316,19 @@ final class Position(
   }
   override def hashCode: Int =
     java.util.Arrays.hashCode(board) * 31 + sideToMove * 7 + castling * 3 + epSquare
+}
+
+/** Growable unboxed move buffer the generator appends to. */
+final class MoveList(initialCapacity: Int) {
+  private var moves = new Array[Int](initialCapacity)
+  private var n = 0
+  def size: Int = n
+  def apply(i: Int): Int = moves(i)
+  def add(m: Int): Unit = {
+    if (n == moves.length) moves = java.util.Arrays.copyOf(moves, math.max(8, n * 2))
+    moves(n) = m; n += 1
+  }
+  def toArray: Array[Int] = java.util.Arrays.copyOf(moves, n)
 }
 
 object Position {

@@ -13,7 +13,7 @@ import Core._
   * Construction: generate a SUPERSET of candidates from reverse piece
   * movement — normal unmoves with each possible uncapture, pawn
   * push/double/capture unmoves, un-promotions, un-castles, un-en-passant
-  * — then VALIDATE each by replay: m must be in P'.legalMoves() and
+  * — then VALIDATE each by replay: m must be a legal move of P' and
   * P'.make(m) must equal P (board, side, castling, ep). Correctness thus
   * rests on the perft-gated forward engine, not on retro-logic; the
   * generator only has to not MISS candidates (completeness is
@@ -211,8 +211,7 @@ object Retract {
       // a side never stays in check through the opponent's move: P' is
       // only a legal state if the side that is NOT to move is safe
       if (!pred.isAttacked(pred.kingSquare(them), mover)) {
-        pred.legalMoves().find(mm => moveFrom(mm) == from &&
-          moveTo(mm) == to && movePromo(mm) == promo) match {
+        pred.resolve(mkMove(from, to, promo)) match {
           case Some(m) if sameKey(pred.make(m)) => out += ((pred, m)); ()
           case _ =>
         }

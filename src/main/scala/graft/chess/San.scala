@@ -3,38 +3,56 @@ package graft.chess
 import Core._
 
 /** SAN codec (role of the reference's `src/chess/San.h`): parse a SAN
-  * token against a position's legal moves (disambiguation, captures,
+  * token against a position's candidate moves (disambiguation, captures,
   * promotions, castling; check/mate suffixes tolerated), and emit SAN
   * with minimal disambiguation for golden tests.
   */
 object San {
 
-  /** Parse `san` in `pos`; None if it matches zero or >1 legal moves. */
-  def parse(pos: Position, sanRaw: String): Option[Int] = {
-    val san = sanRaw.replaceAll("[+#!?]+$", "")
-    if (san == "O-O" || san == "0-0")
-      return pos.legalMoves().find(m => (moveFlags(m) & FlagCastle) != 0 && file(moveTo(m)) == 6)
-    if (san == "O-O-O" || san == "0-0-0")
-      return pos.legalMoves().find(m => (moveFlags(m) & FlagCastle) != 0 && file(moveTo(m)) == 2)
+  // [Piece][fromFile][fromRank][x][target][=Promo]
+  private val SanRe = "^([NBRQK]?)([a-h]?)([1-8]?)(x?)([a-h][1-8])(=([NBRQ]))?$".r
+  private val Suffix = "[+#!?]+$".r
 
-    // [Piece][fromFile][fromRank][x][target][=Promo]
-    val re = "^([NBRQK]?)([a-h]?)([1-8]?)(x?)([a-h][1-8])(=([NBRQ]))?$".r
+  /** Parse `san` in `pos`; None if it matches zero or >1 legal moves.
+    * Only the pseudo-moves of squares holding our piece of the named
+    * kind (and matching the file/rank hints) are built, and only those
+    * landing on the target are checked for legality. */
+  def parse(pos: Position, sanRaw: String): Option[Int] = {
+    val san = Suffix.replaceAllIn(sanRaw, "")
+    if (san == "O-O" || san == "0-0") return castle(pos, 6)
+    if (san == "O-O-O" || san == "0-0-0") return castle(pos, 2)
+
     san match {
-      case re(pc, ff, fr, _, tgt, _, promo) =>
-        val kind = if (pc.isEmpty) 1 else " NBRQK".indexOf(pc) + 1
+      case SanRe(pc, ff, fr, _, tgt, _, promo) =>
+        val piece = makePiece(pos.sideToMove, if (pc.isEmpty) 1 else " NBRQK".indexOf(pc) + 1)
         val to = parseSquare(tgt)
         val promoKind = if (promo == null || promo.isEmpty) 0 else " NBRQ".indexOf(promo) + 1
-        val cands = pos.legalMoves().filter { m =>
-          moveTo(m) == to &&
-            kindOf(pos.pieceAt(moveFrom(m))) == kind &&
-            movePromo(m) == promoKind &&
-            (ff.isEmpty || file(moveFrom(m)) == ff.charAt(0) - 'a') &&
-            (fr.isEmpty || rank(moveFrom(m)) == fr.charAt(0) - '1') &&
-            (moveFlags(m) & FlagCastle) == 0
+        val cands = new MoveList(32)
+        var sq = 0
+        while (sq < 64) {
+          if (pos.pieceAt(sq) == piece &&
+              (ff.isEmpty || file(sq) == ff.charAt(0) - 'a') &&
+              (fr.isEmpty || rank(sq) == fr.charAt(0) - '1'))
+            pos.pseudoMovesFrom(sq, cands)
+          sq += 1
         }
-        if (cands.length == 1) Some(cands(0)) else None
+        var found = NoMove; var n = 0; var i = 0
+        while (i < cands.size) {
+          val m = cands(i)
+          if (moveTo(m) == to && movePromo(m) == promoKind &&
+              (moveFlags(m) & FlagCastle) == 0 && pos.isLegal(m)) { found = m; n += 1 }
+          i += 1
+        }
+        if (n == 1) Some(found) else None
       case _ => None
     }
+  }
+
+  /** Castling to the king's `toFile`, resolved from its home square. */
+  private def castle(pos: Position, toFile: Int): Option[Int] = {
+    val home = if (pos.sideToMove == White) 4 else 60
+    pos.resolve(mkMove(home, square(toFile, rank(home))))
+      .filter(m => (moveFlags(m) & FlagCastle) != 0)
   }
 
   /** Emit SAN (with +/# suffix) for a legal move in `pos`. */
@@ -75,7 +93,7 @@ object San {
     val from = parseSquare(uci.substring(0, 2))
     val to = parseSquare(uci.substring(2, 4))
     val promo = if (uci.length > 4) " nbrq".indexOf(uci.charAt(4).toLower) + 1 else 0
-    pos.legalMoves().find(m =>
-      moveFrom(m) == from && moveTo(m) == to && movePromo(m) == promo)
+    if (from < 0 || from > 63 || to < 0 || to > 63) None
+    else pos.resolve(mkMove(from, to, promo))
   }
 }

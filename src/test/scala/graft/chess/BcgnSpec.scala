@@ -47,6 +47,17 @@ class BcgnSpec extends SparkTestBase {
     assert(all == 20, s"dir read should still see both files, got $all")
   }
 
+  test("a record with a malformed start FEN is skipped, not fatal to its file") {
+    val games = RandomGames.generate(spark, 3, maxPlies = 20).collect()
+    val bad = games(1).copy(startFen = "not a fen")
+    val bytes = Bcgn.encodeFile(Iterator(games(0), bad, games(2)))
+    val kept = Seq(games(0).gameId, games(2).gameId)
+    assert(Bcgn.decodeFile(bytes).map(_.gameId).toSeq == kept)
+    val dir = java.nio.file.Files.createTempDirectory("bcgn_badfen").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.bcgn"), bytes)
+    assert(read(dir).collect().map(_.gameId).sorted.toSeq == kept)
+  }
+
   test("bcgn is the compact fast-re-read format: smaller than the PGN text") {
     val games = ChessIngest.parseGames(spark,
       spark.createDataset(Seq(SampleGames.pgn)), Core.Level.Human)

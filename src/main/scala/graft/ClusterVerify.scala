@@ -99,9 +99,7 @@ object ClusterVerify {
     * naturally, FORCED on so they run across real executor JVMs:
     * distributed star-contraction CC (driverThreshold=0 — both a
     * planted 40-ring graph asserted equal to driver union-find, and
-    * the full q54 pipeline), and the two-level salted aggregation
-    * under a planted hot key carrying 60% of all occurrences (the
-    * start-position regime), asserted equal to the direct plan. */
+    * the full q54 pipeline). */
   private def forcedBranches(spark: SparkSession,
                              sfDir: String): Map[String, Seq[String]] = {
     import org.apache.spark.sql.functions._
@@ -134,24 +132,7 @@ object ClusterVerify {
         case None    => spark.conf.unset(ConnectedComponents.ThresholdConf)
       }
 
-    // salted two-level agg vs direct, under a 60%-hot key
-    val occ = spark.range(200000).select(
-      when(col("id") % 5 < 3, lit(0L))
-        .otherwise(pmod(col("id"), lit(997))).as("posHi"),
-      lit(1L).as("posLo"), lit(0L).as("reverseMove"),
-      (col("id") % 3).cast("int").as("level"),
-      (col("id") % 3).cast("int").as("result"),
-      col("id").as("gameId"),
-      (col("id") % 100 - 50).as("eloDiff"))
-    val salted = graft.chess.SaltedAgg.salted(occ)
-      .collect().map(_.toString).sorted.toSeq
-    val direct = graft.chess.SaltedAgg.direct(occ)
-      .collect().map(_.toString).sorted.toSeq
-    require(salted == direct,
-      "salted and direct aggregation disagree under the planted hot key")
-
-    Map("cc_rings_distributed" -> dist, "q54_cc_distributed" -> q54,
-        "salted_agg_hotkey" -> salted)
+    Map("cc_rings_distributed" -> dist, "q54_cc_distributed" -> q54)
   }
 
   def main(args: Array[String]): Unit = {

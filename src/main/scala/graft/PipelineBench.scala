@@ -6,7 +6,7 @@ import org.json4s._
 import org.json4s.JsonDSL._
 
 /** Corpus-scale demonstration of the dedup pipeline (the LLM-data
-  * counterpart of `chess.App bench`): generate a synthetic document
+  * counterpart of `chess.RandomGames`): generate a synthetic document
   * corpus ON EXECUTORS (seeded per doc_id — no data movement, stable
   * across cluster sizes), then run the full near-dup stack at volume:
   *

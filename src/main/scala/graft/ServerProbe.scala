@@ -35,7 +35,8 @@ object ServerProbe {
       System.gc()
       val (rps, reqs) = ChessServer.throughput(spark, agg, lines,
         clients = 8, perClient = 12, games = Some(games))
-      System.err.println(f"[server-probe] round $r: $rps%.2f req/s over $reqs requests")
+      System.err.println(
+        f"[server-probe] round $r: $rps%.2f req/s over ${reqs.map(_.size).sum} requests")
       rps
     } finally agg.unpersist(blocking = false)
   }

@@ -2,12 +2,11 @@ package graft.chess
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s.JsonDSL._
 
 import graft.Measure
 
 /** Console entrypoint mirroring the reference's command surface
-  * (create / merge / query-server / dump / bench — SURVEY.md §3).
+  * (create / merge / query-server / dump — SURVEY.md §3).
   * `<games>` is a PGN path or a .bcgn dir/file (see [[readGames]]):
   *
   * {{{
@@ -20,7 +19,6 @@ import graft.Measure
   * runMain graft.chess.App query  [requests|-] [games]    line mode: JSON requests from a file
   *                                                         or stdin, responses on stdout;
   *                                                         default games: SampleGames
-  * runMain graft.chess.App bench  [nGames]                synthetic import+probe bench
   * runMain graft.chess.App tobcgn <pgnPath> <bcgnDir>     PGN -> S3 binary interchange
   * }}}
   */
@@ -118,38 +116,10 @@ object App {
           .foreach(line => println(ChessServer.respond(spark, agg, line, Some(cached))))
         finally src.close()
 
-      case "bench" :: rest =>
-        val n = rest.headOption.map(_.toInt).getOrElse(2000)
-        // corpus generation (random self-play, movegen-bound) is NOT
-        // part of the import metric — materialize it first
-        val tg = System.nanoTime()
-        val corpus = RandomGames.generate(spark, n, maxPlies = 60).cache()
-        corpus.count()
-        val tGen = (System.nanoTime() - tg) / 1e9
-        // the measured session is the caller's: emit must not close it
-        return Measure.emit(() => ()) {
-          val host = Measure.regime()
-          val t0 = System.nanoTime()
-          val occ = ChessIngest.positionStream(spark, corpus).cache()
-          val nOcc = occ.count()
-          val agg = ChessIngest.positionsAgg(occ, approxGames = n).cache()
-          val nEntries = agg.count()
-          val tImport = (System.nanoTime() - t0) / 1e9
-          // batch probe: every distinct position key probed back at once
-          val t1 = System.nanoTime()
-          val probes = occ.select("posHi", "posLo").distinct()
-          val hits = agg.join(probes, Seq("posHi", "posLo")).count()
-          val tProbe = (System.nanoTime() - t1) / 1e9
-          ("bench" -> "chess") ~ ("games" -> n) ~ ("positions" -> nOcc) ~
-            ("entries" -> nEntries) ~ ("gen_s" -> tGen) ~ ("import_s" -> tImport) ~
-            ("pos_per_s" -> (nOcc / tImport).toLong) ~ ("probe_keys" -> hits) ~
-            ("probe_s" -> tProbe) ~ host.close()
-        }
-
       case other =>
         System.err.println(s"unknown command: ${other.mkString(" ")}")
         System.err.println(
-          "usage: create|append|merge|dump|server|query|bench|tobcgn (see scaladoc)")
+          "usage: create|append|merge|dump|server|query|tobcgn (see scaladoc)")
         return 1
     }
     0

@@ -81,35 +81,29 @@ object ChessIngest {
     }
   }
 
-  /** Above this corpus size the hottest keys (the start position occurs
-    * once per game; popular openings nearly as often) carry enough rows
-    * that the FINAL-agg reducer holding them becomes the straggler —
-    * map-side partial agg bounds per-task state but every partial for a
-    * key still lands on one reducer. The two-level salted plan spreads
-    * each key over SaltedAgg's sub-keys first. Below the threshold the
-    * extra shuffle stage costs more than it saves. */
-  val SkewGamesThreshold = 250000L
-
   /** The entry store (delta-format role): pre-aggregated by the full
     * key (signature, reverseMove, level, result). Partial+final hash
-    * agg ≈ the reference's buffer-sort + k-way merge combine.
-    *
-    * `approxGames` (from catalog/ingest stats; 0 = unknown) switches to
-    * the salted two-level plan past SkewGamesThreshold — exactly equal
-    * output (all measures reassociative), asserted in SaltedAggSpec. */
-  def positionsAgg(occ: Dataset[PosOcc], approxGames: Long = 0L): DataFrame =
-    if (approxGames >= SkewGamesThreshold) SaltedAgg.salted(occ.toDF())
-    else SaltedAgg.direct(occ.toDF())
+    * agg ≈ the reference's buffer-sort + k-way merge combine. The start
+    * position occurs in every game, but map-side partial aggregation
+    * already folds a hot key to one row per map task before the one
+    * shuffle, so the plan needs no salting. */
+  def positionsAgg(occ: Dataset[PosOcc]): DataFrame = entriesOf(occ.toDF(), EntryKeys)
 
   /** The entry key: position signature, the move that led there, and
     * the game class. */
   val EntryKeys: Seq[String] = Seq("posHi", "posLo", "reverseMove", "level", "result")
 
+  /** Occurrences → entries: one occurrence is one game. */
+  private def entriesOf(occ: DataFrame, keys: Seq[String]): DataFrame =
+    occ.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("games"), sum("eloDiff").as("eloDiffSum"),
+           min("gameId").as("firstGameId"), max("gameId").as("lastGameId"))
+
   /** The one entry-merge rule: entries equal on `keys` combine as
     * Σ games, Σ eloDiffSum, min firstGameId, max lastGameId — the
     * reference's k-way run-merge combine. Every measure is
     * reassociative, so the rule serves each level that merges partial
-    * entries: salted sub-aggregates, store epochs and probe rollups. */
+    * entries: store epochs and probe rollups. */
   def mergeEntries(entries: DataFrame, keys: Seq[String]): DataFrame =
     entries.groupBy(keys.map(col): _*)
       .agg(sum(col("games")).as("games"),

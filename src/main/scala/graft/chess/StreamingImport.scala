@@ -72,29 +72,4 @@ object StreamingImport {
     * (works on HDFS/S3 paths, not just local disk), no Spark job. */
   def epochCount(destDir: String): Int =
     graft.Fs.childNames(destDir).count(_.startsWith("epoch="))
-
-  /** Compaction trigger policy: compact once the store accumulates
-    * this many epochs (the default `compactEvery`). Measured
-    * (COMPACTION_BENCH.json, 100k games, 5.6M entries): probe LATENCY
-    * is flat in epoch count on one node — the per-epoch partials
-    * re-merge in the same parallel agg — and row inflation is small
-    * when epochs' key sets barely overlap (~2% here; it approaches
-    * ×epochs for hot-key-heavy corpora, e.g. openings). What grows
-    * without bound is FILE count (×16 at 16 epochs): at cluster scale
-    * that is listing RPCs, footer reads and scheduler tasks on every
-    * probe, paid by every executor. Compacting every ~8 epochs keeps
-    * the file count a small constant over unbounded appends while
-    * paying the one-pass rewrite (readStore + write, ~2x one probe
-    * here) an 8th as often as every-epoch compaction would. */
-  val DefaultCompactEpochs = 8
-
-  /** Apply the trigger policy: compact `destDir` into `compactedDir`
-    * iff the epoch count has reached `compactEvery`. Returns whether
-    * compaction ran. */
-  def maybeCompact(spark: SparkSession, destDir: String, compactedDir: String,
-                   compactEvery: Int = DefaultCompactEpochs): Boolean = {
-    val due = epochCount(destDir) >= compactEvery
-    if (due) compact(spark, destDir, compactedDir)
-    due
-  }
 }

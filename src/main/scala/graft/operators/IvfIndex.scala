@@ -384,18 +384,6 @@ object IvfIndex {
       .map(c => graft.Fs.childNames(s"$dir/index/$c").count(_.startsWith("epoch=")))
       .maxOption.getOrElse(0)
 
-  /** Trigger policy, the chess store's: compact once any cell
-    * accumulates `compactEvery` epoch leaves. Returns whether the
-    * compaction ran. */
-  val DefaultCompactEpochs = 8
-  def maybeCompactEpochs(s: org.apache.spark.sql.SparkSession, dir: String,
-                         compactedDir: String,
-                         compactEvery: Int = DefaultCompactEpochs): Boolean = {
-    val due = epochCount(dir) >= compactEvery
-    if (due) compactEpochs(s, dir, compactedDir)
-    due
-  }
-
   /** Per-probe top-`k` against a `writeIndexed` layout. The probes' cell
     * set is O(probes × nprobe) — model-sized — so it is collected and
     * pushed as a LITERAL partition filter: the scan's PartitionFilters

@@ -84,8 +84,9 @@ object VectorQueries {
     * sensitive: measured on the PipelineBench corpus (100 planted
     * topics), centroid under-coverage piled ~4000 vectors into one
     * cell and blew the 400k-vector join to ~400M candidate pairs.
-    * The cap bounds every cell's contribution at c×(cap-ish) — the
-    * SaltedAgg doctrine applied to the pair scan. md5 (not xxhash64)
+    * The cap bounds every cell's contribution at c×(cap-ish): salting
+    * spreads a hot cell over sub-cells the way a join salts a hot key,
+    * trading the pairs across sub-cells for a bounded join. md5 (not xxhash64)
     * so the oracle regenerates the salt bit-for-bit; inert at every
     * harness SF (cells ≈ 31 rows), so the test-scale graph — and all
     * its oracles — are unchanged. */

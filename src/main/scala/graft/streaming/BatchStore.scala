@@ -11,10 +11,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `UpsertStore`, …) and of the incremental dedup pipelines' tables
   * ([[IncrementalDedup]]'s band/shingle tables, [[IncrementalSemDedup]]'s
   * store/removed tables), all driven by the one runner [[stream]]. The
-  * fold follows the same trigger policy as the chess
-  * entry store (`StreamingImport`) and the IVF layout
-  * (`IvfIndex.compactEpochs`), applied to the one place it matters most:
-  * these stores are RE-READ on every micro-batch, so one partition per
+  * fold is the epoch compaction of the chess entry store
+  * (`StreamingImport.compact`) and the IVF layout
+  * (`IvfIndex.compactEpochs`), run on a trigger here because these
+  * stores are RE-READ on every micro-batch, so one partition per
   * batch forever is unbounded file-count growth (listing RPCs, footer
   * reads, scheduler tasks) on the hottest read path of a long-running
   * deployment.
@@ -57,11 +57,9 @@ object BatchStore {
   private val StagingPrefix = "_staging_"
 
   /** Default fold cadence (the `compactEvery` of [[append]]): compact
-    * once a store accumulates this many live leaf partitions — the
-    * chess store's default (`StreamingImport.DefaultCompactEpochs`), for
-    * the same reason: probe latency is flat in partition count on one
-    * node, but file count (paid in listing RPCs and tasks by EVERY
-    * batch's re-read) grows without bound; folding every ~8 batches
+    * once a store accumulates this many live leaf partitions. Without
+    * a fold, file count (paid in listing RPCs and tasks by EVERY
+    * batch's re-read) grows with every batch; folding every ~8 batches
     * keeps it a small constant while amortizing the rewrite. */
   val DefaultCompactBatches = 8
 

@@ -102,14 +102,12 @@ class IvfIndexSpec extends SparkTestBase {
       s"cell must stay inside a partition filter with the epoch level present:\n$p")
 
     // epoch compaction (the unbounded cost of appends is FILE count,
-    // not probe latency): the trigger fires at its threshold,
-    // the rewrite collapses every cell to one epoch leaf, and probes
-    // answer identically off the compacted layout (epochCount guards
-    // the precondition so the trigger check isn't vacuous)
+    // not probe latency): the rewrite collapses every cell to one epoch
+    // leaf, and probes answer identically off the compacted layout
+    // (epochCount guards the precondition so the check isn't vacuous)
     val comp = Files.createTempDirectory("graft-ivf-comp").toString
     assert(IvfIndex.epochCount(inc) === 3)
-    assert(IvfIndex.maybeCompactEpochs(spark, inc, comp, compactEvery = 3),
-      "3 epoch leaves must trip the threshold-3 trigger")
+    IvfIndex.compactEpochs(spark, inc, comp)
     assert(IvfIndex.epochCount(comp) === 1,
       "compaction must leave exactly one epoch leaf per cell")
     val gotC = IvfIndex.topKIndexed(probes, comp, nprobe, k)

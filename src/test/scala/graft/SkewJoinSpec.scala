@@ -4,14 +4,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 
-/** The OTHER skew defense (SURVEY.md §6: "salting for skew, AQE for
-  * runtime re-plan"): the deterministic salted two-level agg is forced
-  * and verified in ClusterVerify/SaltedAgg; this spec proves the
-  * runtime path — AQE must DETECT a planted hot join key from shuffle
-  * statistics and split the skewed partition into parallel subtasks
-  * (OptimizeSkewedJoin), without any query rewrite. At 100 TB this is
-  * what catches the skew nobody salted for, so it must demonstrably
-  * fire, not just be enabled.
+/** The runtime skew defense (SURVEY.md §6: "salting for skew, AQE for
+  * runtime re-plan"): AQE must DETECT a planted hot join key from
+  * shuffle statistics and split the skewed partition into parallel
+  * subtasks (OptimizeSkewedJoin), without any query rewrite. A hot
+  * GROUP-BY key needs no such help — map-side partial aggregation
+  * folds it to one row per map task (the chess store's
+  * `ChessIngest.positionsAgg`) — but a hot JOIN key ships every row,
+  * so at 100 TB this is what catches the skew nobody salted for, and
+  * it must demonstrably fire, not just be enabled.
   */
 class SkewJoinSpec extends SparkTestBase {
 

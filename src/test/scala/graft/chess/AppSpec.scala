@@ -10,8 +10,8 @@ import org.json4s.jackson.JsonMethods
 import graft.SparkTestBase
 
 /** The chess CLI end to end through `App.run` on the shared session:
-  * create from PGN, convert to BCGN, append from BCGN, merge, and the
-  * header flags of the served store. */
+  * create from PGN, convert to BCGN, append from BCGN, merge, the
+  * header flags of the served store and the unknown-command exit. */
 class AppSpec extends SparkTestBase {
   import spark.implicits._
   implicit private val fmts: Formats = DefaultFormats
@@ -71,6 +71,17 @@ class AppSpec extends SparkTestBase {
     assert(StreamingImport.epochCount(merged) == 1)
     assert(sorted(spark.read.parquet(merged)) == before,
       "merge must equal readStore of the epochs")
+  }
+
+  test("an unknown command exits 1 with a usage line that lists no bench") {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val codes = try Seq("bench", "nope").map(c => App.run(spark, Array(c)))
+                finally System.setErr(saved)
+    assert(codes == Seq(1, 1), s"exit codes: $codes")
+    val usage = err.toString("UTF-8").split("\n").filter(_.startsWith("usage:")).toSeq
+    assert(usage.size == 2 && usage.forall(!_.contains("bench")), usage.mkString("\n"))
   }
 
   private val headerRequest =

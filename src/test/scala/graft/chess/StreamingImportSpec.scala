@@ -73,14 +73,11 @@ class StreamingImportSpec extends SparkTestBase {
     assert(afterReplay == beforeReplay,
       "an epoch replay must rewrite its partition, not double it")
 
-    // trigger policy: fires at the threshold, not below it
+    // compaction of a multi-epoch store leaves one epoch, same entries
     val epochs = StreamingImport.epochCount(dest)
     assert(epochs >= 2, "the two-drop + catch-up ingest must leave multiple epochs")
     val c2 = tmp("pos-compacted2")
-    assert(!StreamingImport.maybeCompact(spark, dest, c2, compactEvery = epochs + 1),
-      "below the threshold the policy must not compact")
-    assert(StreamingImport.maybeCompact(spark, dest, c2, compactEvery = epochs),
-      "at the threshold the policy must compact")
+    StreamingImport.compact(spark, dest, c2)
     assert(StreamingImport.epochCount(c2) == 1)
     assert(norm(StreamingImport.readStore(spark, c2))
       .exceptAll(norm(StreamingImport.readStore(spark, dest))).isEmpty)

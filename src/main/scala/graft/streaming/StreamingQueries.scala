@@ -255,14 +255,18 @@ object StreamingQueries {
       sess.conf.set("spark.sql.shuffle.partitions", n.toString)
       p
     }
-    try {
+    // the stream clones the session when it starts, so the caller's
+    // width is restored before the run: queries planned on `sess`
+    // meanwhile keep their own width
+    val query = try {
       out.writeStream.format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .outputMode("append")
-        .start().awaitTermination()
+        .start()
     } finally prev.foreach(p => sess.conf.set("spark.sql.shuffle.partitions", p))
+    query.awaitTermination()
     (cleanupDirs :+ ckpt).foreach(rmTree)
     // Unload this run's state-store providers NOW: the checkpoint is
     // gone, but loaded providers would otherwise stay in the JVM and

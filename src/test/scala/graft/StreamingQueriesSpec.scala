@@ -354,6 +354,34 @@ class StreamingQueriesSpec extends SparkTestBase {
     assertSame(q("q76_stream_dedup"), events, "q76")
   }
 
+  test("q76: the state width of 8 stays on the stream; the caller's session keeps its own width") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    // (the caller's width, the state width) as each progress event arrives
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        seen.add((spark.conf.get(key), e.progress.stateOperators(0).numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.conf.set(key, "3")
+    spark.streams.addListener(listener)
+    try {
+      assertSame(q("q76_stream_dedup"), events, "q76 width")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.conf.set(key, before)
+    }
+    val reads = seen.toArray.toSeq
+    assert(reads.nonEmpty, "no progress event arrived")
+    assert(reads.forall(_ == (("3", 8L))), reads)
+  }
+
   test("q80: stream-stream interval join equals the batch self-join") {
     val a = events.select(col("event_id").as("id_a"), col("ts").as("ts_a"),
       col("user_id")).filter(col("id_a") % 2 === 0)
